@@ -449,8 +449,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_token_counts_bpe": lambda s, d: _q_token_counts_bpe(s, d),
         "q_approx_topk": lambda s, d: _q_approx_topk(s, d),
         "q_landmark_distances": lambda s, d: _q_landmark_distances(s, d),
-        # --- round-4 additions: skew-split + resume parity witnesses ---
-        "q_pagerank_hot_src": lambda s, d: _q_pagerank_hot_src(s, d),
+        # --- round-4 additions: resume parity witness ---
         "q_sssp_delta_resume": lambda s, d: _q_sssp_delta_resume(s, d),
         "q_adamic_adar": lambda s, d: _q_adamic_adar(s, d),
         "q_common_neighbors": lambda s, d: _q_common_neighbors(s, d),
@@ -987,23 +986,6 @@ def _q_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_coefficient(edges, max_degree=10_000, min_common=2).select(
         "a", "b", F.round("score", 6).alias("score")
     )
-
-
-def _q_pagerank_hot_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank through the hot-src split join (round-robin hot slice +
-    broadcast hot ranks — graph/pagerank.py hot_src_threshold,
-    BENCH/SKEW.md). The threshold marks most of the dense mod-211
-    graph's srcs hot, exercising the split path hard; ranks must equal
-    the plain co-partitioned join's, so the oracle is the SAME unrolled
-    power-iteration SQL as q_pagerank_top."""
-    from plwordnet_spark.graph.pagerank import pagerank
-
-    edges = _derived_edges(spark, sf_dir)
-    res = pagerank(
-        spark, edges, tol=0.0, max_iterations=_PR_ITERS, weighted=False,
-        hot_src_threshold=10,
-    )
-    return res.state.select("id", F.round("rank", 8).alias("rank"))
 
 
 def _q_sssp_delta_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5801,7 +5783,6 @@ def oracle_sql() -> dict[str, str]:
         # 15-round unrolled relaxation reaches the same fixpoint
         "q_sssp_delta_stepping": _sssp_oracle_sql(),
         "q_sssp_delta_resume": _sssp_oracle_sql(),
-        "q_pagerank_hot_src": _pagerank_oracle_sql(),
         "q_ppr_batch": _ppr_batch_oracle_sql(),
         "q_adamic_adar": f"""
             WITH edges AS MATERIALIZED ({_EDGE_SQL_DERIVATION}),

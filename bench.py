@@ -10,8 +10,7 @@ on local[$SPARK_GRAFT_CPUS]:
 * TPC-H-ish scan/agg, multi-join, window top-k on lineitem/orders,
 * MinHash-LSH dedup over documents, exact cosine top-k over embeddings,
 * streaming ingest (pages stream → incremental EdgeLog) vs batch build,
-* salted vs unsalted gather on a hub-skewed graph (explicit skew
-  handling evidence for the north rule).
+* PageRank on hub-skewed graphs (one hub dst, one hub src).
 
 Methodology: this host's throughput varies 2-3× run to run (shared VM),
 so EVERY iterative row is the MEDIAN of $SPARK_GRAFT_BENCH_REPS
@@ -125,13 +124,6 @@ def main() -> None:
                 ),
             ),
             (
-                "pagerank_csr",
-                lambda: pagerank(
-                    spark, tables.edges, nodes=tables.nodes, tol=1e-6,
-                    max_iterations=60, use_csr=True,
-                ),
-            ),
-            (
                 "connected_components",
                 lambda: connected_components(
                     spark, tables.edges, nodes=tables.nodes
@@ -173,9 +165,6 @@ def main() -> None:
             n_edges * pr.iterations / timings["pagerank_convergence"], 1
         ),
         "cpus": CPUS,
-        "csr_edges_per_sec": round(
-            n_edges * first["pagerank_csr"].iterations / timings["pagerank_csr"], 1
-        ),
     }
     detail["minhash"] = dict(zip(("kept", "dup_pairs"), first["minhash_dedup"]))
 
@@ -429,9 +418,9 @@ def main() -> None:
         }
         shutil.rmtree(ingest_root, ignore_errors=True)
 
-    # --- skew: salted vs unsalted gather on a hub-heavy graph --------
-    # the north rule names explicit skew handling; this row pair is the
-    # evidence. Graph: power-law dst + ~10% of ALL edges pointing at one
+    # --- skew: the gather on a hub-heavy graph ------------------------
+    # map-side partial aggregation absorbs the hub dst (BENCH/SKEW.md).
+    # Graph: power-law dst + ~10% of ALL edges pointing at one
     # hub id (a Common-Crawl-style "facebook.com problem"). Interleaved
     # reps like every other iterative row.
     skew_edges_target = int(os.environ.get("SPARK_GRAFT_BENCH_SKEW_EDGES", "8000000"))
@@ -459,14 +448,6 @@ def main() -> None:
                         auto_tune=False, check_interval=5,
                     ),
                 ),
-                (
-                    "pagerank_skew_salted",
-                    lambda: pagerank(
-                        spark, skewed, tol=0.0, max_iterations=skew_iters,
-                        auto_tune=False, check_interval=5,
-                        salted_gather=True, n_salts=CPUS,
-                    ),
-                ),
             ],
             REPS,
         )
@@ -481,17 +462,13 @@ def main() -> None:
             "unsalted_edge_iters_per_sec": round(
                 n_skewed * skew_iters / timings["pagerank_skew_unsalted"], 1
             ),
-            "salted_edge_iters_per_sec": round(
-                n_skewed * skew_iters / timings["pagerank_skew_salted"], 1
-            ),
         }
         skewed.unpersist()
 
-    # --- skew, src side: hot-key split join vs plain -----------------
-    # the OTHER hub problem: one src owning ~10% of all edges makes the
-    # co-partitioned rank join a straggler (all hub out-edges in one hash
-    # partition). Row pair: plain join vs hot_src_threshold split
-    # (round-robin hot slice + broadcast hot ranks — BENCH/SKEW.md).
+    # --- skew, src side -----------------------------------------------
+    # the OTHER hub problem: one src owning ~10% of all edges puts all
+    # hub out-edges in one hash partition of the co-partitioned rank
+    # join (BENCH/SKEW.md).
     srcskew_target = int(os.environ.get("SPARK_GRAFT_BENCH_SRCSKEW_EDGES", "8000000"))
     if srcskew_target > 0:
         sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
@@ -517,14 +494,6 @@ def main() -> None:
                         auto_tune=False, check_interval=5,
                     ),
                 ),
-                (
-                    "pagerank_srcskew_split",
-                    lambda: pagerank(
-                        spark, srcskew, tol=0.0, max_iterations=ss_iters,
-                        auto_tune=False, check_interval=5,
-                        hot_src_threshold=n_ss // 100,
-                    ),
-                ),
             ],
             REPS,
         )
@@ -539,9 +508,6 @@ def main() -> None:
             "plain_edge_iters_per_sec": round(
                 n_ss * ss_iters / timings["pagerank_srcskew_plain"], 1
             ),
-            "split_edge_iters_per_sec": round(
-                n_ss * ss_iters / timings["pagerank_srcskew_split"], 1
-            ),
         }
         srcskew.unpersist()
 
@@ -553,9 +519,7 @@ def main() -> None:
     # (default 2) INTERLEAVED reps — r4's single shots swung 2.2×
     # between same-day runs, and these are the north-rule throughput
     # numbers; the lower-middle median convention bounds a 2-rep pair by
-    # its better half. The CSR row stays single-shot by budget (the
-    # join path is the default; README's crossover table carries the
-    # CSR story).
+    # its better half.
     big_edges_target = int(os.environ.get("SPARK_GRAFT_BENCH_BIG_EDGES", "22000000"))
     big_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_BIG_REPS", "2")))
     if big_edges_target > 0:
@@ -592,19 +556,6 @@ def main() -> None:
             "cpus": CPUS,
         }
 
-        # CSR path at the same scale — extends the documented CSR-vs-join
-        # crossover data (README) with the point where per-iteration work
-        # dominates; timing includes the one-time adjacency staging.
-        def _pr_big_csr():
-            return pagerank(
-                spark, big, tol=0.0, max_iterations=big_iters,
-                auto_tune=False, check_interval=5, use_csr=True,
-            )
-
-        timed("pagerank_big_csr", _pr_big_csr)
-        detail["pagerank_big"]["csr_edge_iters_per_sec"] = round(
-            n_big * big_iters / timings["pagerank_big_csr"], 1
-        )
         detail["bfs_big"] = {
             "n_edges": n_big,
             "iterations": res_bfs.iterations,
@@ -647,19 +598,12 @@ def main() -> None:
         "edges": n_edges,
         "pr_eps": detail.get("pagerank", {}).get("edges_per_sec"),
         "pr_big_eips": detail.get("pagerank_big", {}).get("edge_iters_per_sec"),
-        "pr_big_csr_eips": detail.get("pagerank_big", {}).get("csr_edge_iters_per_sec"),
         "bfs_big_reached": detail.get("bfs_big", {}).get("reached"),
         "skew_unsalted_eips": detail.get("pagerank_skew", {}).get(
             "unsalted_edge_iters_per_sec"
         ),
-        "skew_salted_eips": detail.get("pagerank_skew", {}).get(
-            "salted_edge_iters_per_sec"
-        ),
         "srcskew_plain_eips": detail.get("pagerank_srcskew", {}).get(
             "plain_edge_iters_per_sec"
-        ),
-        "srcskew_split_eips": detail.get("pagerank_srcskew", {}).get(
-            "split_edge_iters_per_sec"
         ),
         "lookup_loop_ps": pl.get("sequential_lookups_per_sec"),
         "lookup_batch_rps": pl.get("batch_key_join_rows_per_sec"),

@@ -86,7 +86,7 @@ def cmd_pagerank(args) -> int:
     nodes, edges = _load_graph(spark, args.graph)
     res = pagerank(
         spark, edges, nodes=nodes, tol=args.tol, max_iterations=args.max_iterations,
-        checkpoint_dir=args.checkpoint_dir, use_csr=args.csr,
+        checkpoint_dir=args.checkpoint_dir,
     )
     if args.output:
         res.state.write.mode("overwrite").parquet(args.output)
@@ -492,7 +492,6 @@ def main(argv: list[str] | None = None) -> int:
             p.add_argument("--tol", type=float, default=1e-6)
             p.add_argument("--max-iterations", type=int, default=100)
             p.add_argument("--checkpoint-dir", default=None)
-            p.add_argument("--csr", action="store_true")
         if name == "bfs":
             p.add_argument("--sources", required=True,
                            help="comma-separated seed node ids")

@@ -20,10 +20,9 @@ explicitly"):
   auditing mandatory, not optional),
 * edges are hash-repartitioned by ``src`` and written that way, so every
   downstream gather join starts co-located,
-* hub detection runs off the degree table; a ``salt`` column
-  (``pmod(xxhash64(src, dst), n_salts)`` for hub-dst edges, 0 otherwise)
-  ships with the edge table so skew-aware jobs can split hot reduce keys
-  without recomputing degrees.
+* hub detection runs off the degree table (``nodes.is_hub``); the edge
+  table carries no skew metadata — the gathers' map-side partial
+  aggregation absorbs hub keys (BENCH/SKEW.md).
 """
 
 from __future__ import annotations
@@ -35,7 +34,10 @@ from pyspark.sql import functions as F
 
 from plwordnet_spark.extraction.udfs import extract_links_udf
 
-__all__ = ["GraphTables", "build_graph", "id_collisions", "merge_edge_tables", "validate_graph"]
+__all__ = [
+    "GraphTables", "build_graph", "hash_pairs", "id_collisions", "link_pairs",
+    "merge_edge_tables", "validate_graph",
+]
 
 REL_INTRA_DOMAIN = 1
 REL_CROSS_DOMAIN = 2
@@ -49,24 +51,17 @@ def _domain(col):
 @dataclass
 class GraphTables:
     nodes: DataFrame  # (id, url, domain, out_degree, in_degree, is_hub)
-    edges: DataFrame  # (src, dst, rel_id, weight, salt)
+    edges: DataFrame  # (src, dst, rel_id, weight)
     link_pairs: DataFrame  # (src_url, dst_url, rel_id, weight) — pre-hash, for audits
 
 
-def build_graph(
-    pages: DataFrame,
-    hub_degree_threshold: int = 64,
-    n_salts: int = 16,
-    edge_partitions: int | None = None,
-) -> GraphTables:
-    """pages(url, html, …) → GraphTables.
+def link_pairs(pages: DataFrame) -> DataFrame:
+    """pages(url, html, …) → url-level (src_url, dst_url, rel_id, weight).
 
-    ``hub_degree_threshold``: in-degree above which a dst node counts as
-    a hub (its incoming edges get a nonzero salt). On the synthetic
-    corpus the hub domains (corpus.py power-law) trip this; on a real
-    crawl the threshold would come from the degree histogram.
-    """
-    link_pairs = (
+    The one edge derivation: the batch build and every streaming
+    micro-batch hash this plan into ids. Returned uncached — callers
+    that reuse it decide whether to cache."""
+    return (
         pages.select(
             F.col("url").alias("src_url"),
             F.explode(extract_links_udf(F.col("html"))).alias("dst_url"),
@@ -84,24 +79,44 @@ def build_graph(
         # dedup is lossless — dropDuplicates would discard it)
         .groupBy("src_url", "dst_url", "rel_id")
         .agg(F.count(F.lit(1)).cast("double").alias("weight"))
-    ).cache()  # consumed by edges, nodes AND degrees — one extraction pass,
-    # not three (at production scale this is a persisted staging table)
+    )
 
-    edges_unsalted = link_pairs.select(
+
+def hash_pairs(pairs: DataFrame) -> DataFrame:
+    """url-level pairs → id-level (src, dst, rel_id, weight) edges."""
+    return pairs.select(
         F.xxhash64("src_url").alias("src"),
         F.xxhash64("dst_url").alias("dst"),
         "rel_id",
         "weight",
     )
 
+
+def build_graph(
+    pages: DataFrame,
+    hub_degree_threshold: int = 64,
+    edge_partitions: int | None = None,
+) -> GraphTables:
+    """pages(url, html, …) → GraphTables.
+
+    ``hub_degree_threshold``: in-degree at or above which a node counts
+    as a hub (``nodes.is_hub``). On the synthetic corpus the hub domains
+    (corpus.py power-law) trip this; on a real crawl the threshold would
+    come from the degree histogram.
+    """
+    # consumed by edges, nodes AND degrees — one extraction pass, not
+    # three (at production scale this is a persisted staging table)
+    pairs = link_pairs(pages).cache()
+    edges = hash_pairs(pairs)
+
     page_nodes = pages.select(F.col("url"))
-    target_nodes = link_pairs.select(F.col("dst_url").alias("url"))
+    target_nodes = pairs.select(F.col("dst_url").alias("url"))
     urls = page_nodes.unionByName(target_nodes).distinct()
 
-    out_deg = edges_unsalted.groupBy(F.col("src").alias("id")).agg(
+    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("out_degree")
     )
-    in_deg = edges_unsalted.groupBy(F.col("dst").alias("id")).agg(
+    in_deg = edges.groupBy(F.col("dst").alias("id")).agg(
         F.count(F.lit(1)).alias("in_degree")
     )
 
@@ -113,43 +128,19 @@ def build_graph(
         .withColumn("is_hub", F.col("in_degree") >= F.lit(hub_degree_threshold))
     )
 
-    # hub dst set computed straight from the in-degree aggregate: every
-    # in_deg id IS a dst node id, so this equals nodes.filter(is_hub)
-    # exactly — but the edge table's plan no longer drags in the whole
-    # node pipeline (urls-distinct + two degree joins) just to learn
-    # which dst ids are hubs (guide §2.4: don't compute what the
-    # consumer throws away)
-    hubs = in_deg.filter(
-        F.col("in_degree") >= F.lit(hub_degree_threshold)
-    ).select(F.col("id").alias("dst"))
-    # broadcast: the hub set is tiny by construction (tail of the degree
-    # distribution); the join only tags edges, no shuffle of the edge table
-    edges = (
-        edges_unsalted.join(F.broadcast(hubs.withColumn("h", F.lit(1))), "dst", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("h").isNotNull(),
-                F.pmod(F.xxhash64("src", "dst"), F.lit(n_salts)).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("h")
-        .select("src", "dst", "rel_id", "weight", "salt")
-    )
     if edge_partitions:
         edges = edges.repartition(edge_partitions, "src")
     else:
         edges = edges.repartition("src")
-    return GraphTables(nodes=nodes, edges=edges, link_pairs=link_pairs)
+    return GraphTables(nodes=nodes, edges=edges, link_pairs=pairs)
 
 
 def merge_edge_tables(existing: DataFrame, new: DataFrame) -> DataFrame:
-    """Incremental crawl merge: union two (src, dst, rel_id, weight[, salt])
+    """Incremental crawl merge: union two (src, dst, rel_id, weight)
     edge tables, summing multiplicity weights of edges seen in both —
     the MERGE-INTO shape of an Iceberg upsert, expressed relationally
     (the reference's incremental skip-already-done batch pattern,
-    plwordnet_ml/.../wrappers.py:292-304, upgraded to additive merge).
-    Salt is recomputed downstream by the degree job; dropped here."""
+    plwordnet_ml/.../wrappers.py:292-304, upgraded to additive merge)."""
     cols = ["src", "dst", "rel_id", "weight"]
     return (
         existing.select(*cols)

@@ -206,18 +206,19 @@ def greedy_coloring(
     rem_edges = sym.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).localCheckpoint(eager=True)
-    n_sym = rem_edges.count()
     out: list[DataFrame] = []
     # loop_tuning + hints per the MIS round loop's rationale: the color
-    # loop's own joins all ride checkpointed frames, and the per-color
-    # subgraph shrinks — the inner maximal_independent_set re-enters
-    # loop_tuning with its (smaller) edge count and restores on exit
+    # loop's own joins all ride checkpointed frames, and each color is
+    # sized by its own (shrinking) remaining edge count — the inner
+    # maximal_independent_set re-enters loop_tuning with the same count
+    # and restores on exit
     for color in range(max_colors):
         n_left = remaining_nodes.count()
         if n_left == 0:
             break
-        with loop_tuning(spark, n_sym):
-            if rem_edges.limit(1).count() == 0:
+        n_edges = rem_edges.count()
+        with loop_tuning(spark, n_edges):
+            if n_edges == 0:
                 # conflict-free remainder: one final color for everyone
                 mis = remaining_nodes.localCheckpoint(eager=True)
             else:

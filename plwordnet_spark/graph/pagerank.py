@@ -15,8 +15,8 @@ Scale design:
   ``weight / out_weight(src)`` and hash-partitioned by ``src``, then
   cached — per iteration the only shuffles are the rank join on ``src``
   and the gather ``groupBy(dst)``; map-side partial aggregation absorbs
-  hub in-degree skew, and the optional salted two-phase gather splits
-  hot dst keys explicitly (north rule),
+  hub in-degree skew, so this algebraic sum needs no explicit salting
+  (BENCH/SKEW.md, north rule),
 * ranks is the only mutable state: ``(id, rank)``, one row per node,
 * driver sees two scalars per iteration (dangling mass, L1 delta) —
   everything else stays distributed; lineage is truncated by the
@@ -32,11 +32,6 @@ from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
 
 __all__ = ["pagerank"]
 
-# driver-side cap on collected hot-src ids (hot keys are hubs; above
-# this the graph isn't skewed, it's dense — remaining above-threshold
-# srcs stay on the co-partitioned cold path)
-_MAX_HOT_SRCS = 10_000
-
 
 def pagerank(
     spark: SparkSession,
@@ -48,46 +43,20 @@ def pagerank(
     weighted: bool = True,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
-    salted_gather: bool = False,
-    n_salts: int = 16,
     initial_ranks: DataFrame | None = None,
     start_iteration: int = 0,
     check_interval: int = 1,
-    use_csr: bool = False,
-    csr_workdir: str | None = None,
-    csr_buckets: int | None = None,
     auto_tune: bool = True,
     retain_snapshots: int | None = None,
     personalization: DataFrame | None = None,
-    hot_src_threshold: int | None = None,
 ) -> PregelResult:
-    """edges(src, dst[, weight[, salt]]) → ranks(id, rank) summing to 1.
+    """edges(src, dst[, weight]) → ranks(id, rank) summing to 1.
 
     ``nodes``: optional (id, …) universe; defaults to ids appearing in
-    edges. ``salted_gather``: two-phase aggregation splitting each dst
-    key into ``salt`` sub-keys before the final combine. Default OFF by
-    measurement (BENCH/SKEW.md): the gather's map-side partial
-    aggregation already folds a hub dst to ≤ one row per map partition,
-    so for this algebraic sum the explicit salt only adds a shuffle
-    phase (~1.6× slower at a 10%-single-hub graph). Reserve it for
-    non-algebraic gathers (collect_list-style state that partial
-    aggregation cannot shrink). ``hot_src_threshold``: out-degree above
-    which a src is treated as a hot key — the OTHER hub skew, which
-    gather salting and partial aggregation do NOT address: a hub src's
-    out-edges all hash to one partition of the src-partitioned scatter
-    table, making a straggler task in the per-iteration rank join. The
-    split-join treatment (BENCH/SKEW.md): hot-src edges are separated
-    ONCE into a round-robin-partitioned slice whose join uses a
-    broadcast of just the hot ranks rows (at most ~n_hot rows/iter over
-    the wire), so the hub's edges spread across every core; cold edges
-    keep the co-partitioned join. None = off. Results are identical
-    either way (property-tested). ``use_csr``: stage the
-    adjacency once as per-partition CSR blocks (graph/csr.py) so each
-    iteration ships only the rank vector to Python workers; results are
-    identical to the join path (property-tested). ``personalization``:
-    optional (id, p) teleport distribution (topic-sensitive PageRank) —
-    p is normalized to sum 1, missing ids get 0; teleport AND dangling
-    mass redistribute ∝ p. None keeps the uniform scalar fast path."""
+    edges. ``personalization``: optional (id, p) teleport distribution
+    (topic-sensitive PageRank) — p is normalized to sum 1, missing ids
+    get 0; teleport AND dangling mass redistribute ∝ p. None keeps the
+    uniform scalar fast path."""
     weight_col = F.col("weight") if weighted and "weight" in edges.columns else F.lit(1.0)
     edge_w = edges.select("src", "dst", weight_col.cast("double").alias("w"))
 
@@ -99,26 +68,22 @@ def pagerank(
         )
     else:
         ids = nodes.select("id").distinct()
-    # loop tuning (AQE off, right-sized shuffles) measured beneficial for
-    # the join path only; the CSR path manages its own bucket layout.
-    # auto_tune=False keeps session-level configs (the cluster-sized
-    # setting) — used by scaling measurements where shuffle width must
-    # track cluster size
-    n_edge_rows = edge_w.count() if (auto_tune and not use_csr) else None
+    # loop tuning: AQE off, right-sized shuffles. auto_tune=False keeps
+    # session-level configs (the cluster-sized setting) — used by scaling
+    # measurements where shuffle width must track cluster size
+    n_edge_rows = edge_w.count() if auto_tune else None
     with loop_tuning(spark, n_edge_rows):
         return _pagerank_loop(
             spark, edge_w, ids, alpha, tol, max_iterations, checkpoint_dir,
-            checkpoint_interval, salted_gather, n_salts, initial_ranks,
-            start_iteration, check_interval, use_csr, csr_workdir, csr_buckets,
-            retain_snapshots, personalization, hot_src_threshold,
+            checkpoint_interval, initial_ranks, start_iteration, check_interval,
+            retain_snapshots, personalization,
         )
 
 
 def _pagerank_loop(
     spark, edge_w, ids, alpha, tol, max_iterations, checkpoint_dir,
-    checkpoint_interval, salted_gather, n_salts, initial_ranks,
-    start_iteration, check_interval, use_csr, csr_workdir, csr_buckets,
-    retain_snapshots=None, personalization=None, hot_src_threshold=None,
+    checkpoint_interval, initial_ranks, start_iteration, check_interval,
+    retain_snapshots, personalization,
 ) -> PregelResult:
     ids = ids.repartition("id").cache()
     n_nodes = ids.count()
@@ -135,72 +100,13 @@ def _pagerank_loop(
     # shuffle-hash hint: the default sort-merge would sort the FULL edge
     # table once per pagerank() call just to attach a per-src scalar
     # (guide §3.1); hashing the node-count-sized out_w side avoids it.
-    scatter_base = edge_w.join(
-        out_w.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
-    ).select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-
-    # hot-src split (join path only — the CSR layout spreads a hub's
-    # out-edges across buckets by construction): hot srcs' edges go to a
-    # round-robin-partitioned slice joined against a BROADCAST of just
-    # the hot rank rows, so the hub's edges occupy every core instead of
-    # one fat hash partition. The hot-id set stays a DISTRIBUTED frame —
-    # bounded at _MAX_HOT_SRCS rows (hot keys are hubs; a graph with
-    # millions of above-threshold srcs isn't skewed, it's dense) and
-    # cached once, then consumed only through broadcast semi/anti joins:
-    # no driver-side literal list, so the per-iteration plan carries one
-    # small broadcast instead of a 10k-term In expression re-analyzed
-    # every step.
-    hot_src_df = None
-    scatter_hot = None
-    if hot_src_threshold is not None and not use_csr:
-        hot_src_df = (
-            edge_w.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") > hot_src_threshold)
-            .orderBy(F.desc("deg"), "src")
-            .limit(_MAX_HOT_SRCS)
-            .select("src")
-            .cache()
-        )
-        # materialized here so the per-iteration broadcast re-reads the
-        # cache instead of re-running the degree aggregation (Catalyst
-        # does not reuse subtrees across a broadcast exchange)
-        if hot_src_df.count() == 0:
-            hot_src_df.unpersist()
-            hot_src_df = None
-    adj = None
-    tmp_workdir = None
-    scatter = None
-    if use_csr:
-        import tempfile
-
-        from plwordnet_spark.graph.csr import CsrAdjacency
-
-        if csr_workdir is None:
-            tmp_workdir = tempfile.mkdtemp(prefix="plwn_csr_")
-        workdir = csr_workdir or tmp_workdir
-        buckets = csr_buckets or spark.sparkContext.defaultParallelism
-        adj = CsrAdjacency(spark, workdir, buckets, n_rows_hint=n_nodes)
-        # stage straight from the share plan: the CSR loop never touches
-        # the scatter DataFrame again, so caching + materializing it
-        # first (the old path) paid one full extra pass over the edges
-        adj.stage(scatter_base)
-    elif hot_src_df is not None:
-        scatter_hot = (
-            scatter_base.join(F.broadcast(hot_src_df), "src", "left_semi")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .cache()
-        )
-        scatter_hot.count()
-        scatter = (
-            scatter_base.join(F.broadcast(hot_src_df), "src", "left_anti")
-            .repartition("src")
-            .cache()
-        )
-        scatter.count()  # materialize before the loop
-    else:
-        scatter = scatter_base.repartition("src").cache()
-        scatter.count()  # materialize before the loop
+    scatter = (
+        edge_w.join(out_w.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
+        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
+        .repartition("src")
+        .cache()
+    )
+    scatter.count()  # materialize before the loop
 
     dangling = ids.join(out_w, "id", "left_anti").withColumn(
         "_is_dangling", F.lit(True)
@@ -286,12 +192,6 @@ def _pagerank_loop(
         )
 
     def step(ranks: DataFrame) -> DataFrame:
-        dm = state_dm["dm"]
-        if adj is not None:
-            gathered = adj.gather(
-                ranks.withColumn("part", adj.bucket_col(F.col("id")))
-            )
-            return _assemble(gathered, dm)
         # shuffle-hash hint on the rank side (guide §3.1): without it the
         # planner either broadcasts the rank vector (measured at 24M
         # edges: a 2.2M-row hashed relation built serially on the driver
@@ -304,30 +204,10 @@ def _pagerank_loop(
         contribs = scatter.join(
             ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
         )
-        if scatter_hot is not None:
-            hot_ranks = ranks.withColumnRenamed("id", "src").join(
-                F.broadcast(hot_src_df), "src", "left_semi"
-            )
-            contribs = contribs.unionByName(
-                scatter_hot.join(F.broadcast(hot_ranks), "src")
-            )
-        if salted_gather:
-            # phase 1: partial sums per (dst, salt) — splits hub keys
-            # across n_salts reducers; phase 2: tiny combine per dst
-            gathered = (
-                contribs.withColumn(
-                    "salt", F.pmod(F.xxhash64("src"), F.lit(n_salts))
-                )
-                .groupBy("dst", "salt")
-                .agg(F.sum(F.col("rank") * F.col("share")).alias("partial"))
-                .groupBy("dst")
-                .agg(F.sum("partial").alias("incoming"))
-            )
-        else:
-            gathered = contribs.groupBy("dst").agg(
-                F.sum(F.col("rank") * F.col("share")).alias("incoming")
-            )
-        return _assemble(gathered, dm)
+        gathered = contribs.groupBy("dst").agg(
+            F.sum(F.col("rank") * F.col("share")).alias("incoming")
+        )
+        return _assemble(gathered, state_dm["dm"])
 
     def l1_delta(old: DataFrame, new: DataFrame) -> float:
         # one scan: L1 convergence error (+ next iteration's dangling mass
@@ -359,29 +239,12 @@ def _pagerank_loop(
         checkpoint_interval=checkpoint_interval,
         check_interval=check_interval,
         # the step consumes ranks linearly (single reference in the gather
-        # join), so the soft-persist chain is safe and saves one job/iter.
-        # The hot-src split references ranks TWICE (cold join + hot
-        # broadcast filter) — soft chains would inline the lazy parent
-        # subtree per reference and grow the plan exponentially, so that
-        # path hard-truncates every iteration.
-        truncate_interval=1 if scatter_hot is not None else 4,
+        # join), so the soft-persist chain is safe and saves one job/iter
+        truncate_interval=4,
         retain_snapshots=retain_snapshots,
     )
-    try:
-        result = runner.run(init, step, l1_delta, start_iteration=start_iteration)
-    finally:
-        if tmp_workdir is not None:
-            # the final state is materialized by the runner (eager
-            # localCheckpoint / snapshot) before we drop the staged blocks
-            import shutil
-
-            shutil.rmtree(tmp_workdir, ignore_errors=True)
-    if scatter is not None:
-        scatter.unpersist()
-    if scatter_hot is not None:
-        scatter_hot.unpersist()
-    if hot_src_df is not None:
-        hot_src_df.unpersist()
+    result = runner.run(init, step, l1_delta, start_iteration=start_iteration)
+    scatter.unpersist()
     dangling.unpersist()
     if pvec is not None:
         pvec.unpersist()

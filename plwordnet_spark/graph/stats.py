@@ -1,8 +1,8 @@
 """Graph profiling statistics — the pre-flight checks of a web-graph run.
 
 Before any iterative job on a crawl-scale link graph, the operator
-questions are: how skewed are the degrees (salting / hot-src split
-needed?), how many vertices/edges after dedup, is the degree
+questions are: how skewed are the degrees (will a hub straggle?),
+how many vertices/edges after dedup, is the degree
 distribution the expected power law? The reference answers these with
 in-memory NetworkX-style accounting over the WordNet graph
 (plwordnet_handler/base/structure/graph.py); at 10^12 documents they
@@ -192,7 +192,7 @@ def gini_from_histogram(
 ) -> DataFrame:
     """Gini coefficient of a value distribution given as a histogram —
     ONE row (gini double). 0 = perfectly even, →1 = all mass on one
-    node; the scalar skew answer to "do we need hub salting?".
+    node; the scalar skew answer to "will a hub straggle?".
 
     Tie-grouped rank-sum form of the classic estimator: with histogram
     rows sorted ascending by value (d_k, c_k), cumulative counts
@@ -308,8 +308,8 @@ def rich_club(edges: DataFrame, ks: list[int], *, round_to: int = 8) -> DataFram
     φ(k) = 2·E_k / (N_k·(N_k−1)) where N_k = nodes of degree > k and
     E_k = edges between two such nodes (Zhou & Mondragón 2004). A
     rising φ(k) tail is the "hubs link to hubs" signature of web/AS
-    graphs — it decides whether hot-hub handling (salting, hot-src
-    split) pays on THIS crawl.
+    graphs — it says whether hub-skew handling would pay on THIS
+    crawl.
 
     Scale shape: degrees once (one agg), edge min-endpoint-degree via
     two joins against the (id, degree) frame, then BOTH sides collapse

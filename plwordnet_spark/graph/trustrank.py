@@ -73,8 +73,8 @@ def trustrank(
 
     Exactly ``pagerank(personalization=uniform(seeds))``: teleport and
     dangling mass both return to the seed set, so trust decays with
-    link distance from the whitelist. All pagerank knobs (CSR path,
-    hot-src split, checkpoint/resume) pass through."""
+    link distance from the whitelist. All other pagerank knobs
+    (checkpoint/resume, warm start, loop tuning) pass through."""
     return pagerank(
         spark,
         edges,

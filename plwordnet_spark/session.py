@@ -3,13 +3,14 @@
 Local mode is a correctness harness; the configs are chosen so the same
 logical plans behave well on a multi-executor cluster:
 
-* AQE on (runtime coalesce, skew-join splitting) — the backup for the
-  explicit salting the graph jobs do themselves,
+* AQE on (runtime coalesce, skew-join splitting),
 * Arrow on — every Python touchpoint is an Arrow batch, never a row
   (BASELINE.json input_hint: "no per-row Python"),
 * shuffle partitions sized to the parallelism level instead of the 200
-  default, parameterized via env for the local[8]-vs-local[32] scaling
-  runs.
+  default,
+* master and driver memory derived from the host the session starts on
+  (its usable CPUs, half its physical memory), overridable via
+  ``$SPARK_GRAFT_CPUS`` / ``$SPARK_GRAFT_DRIVER_MEM``.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -35,7 +37,7 @@ def _ship_package(spark: SparkSession) -> None:
     mtime), not just the pid: a pid-only name let a pid-recycled process
     from a different checkout (or an edited tree) reuse a stale zip and
     silently ship OLD worker code — observed as a cross-version
-    KeyError in the CSR gather during r6 A/B measurement."""
+    KeyError in a worker-side gather during A/B measurement."""
     import hashlib
 
     newest = 0.0
@@ -64,6 +66,36 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def _host_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the machine's)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def _read_meminfo() -> str:
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            return fh.read()
+    except OSError:
+        return ""
+
+
+def _host_defaults(env: Mapping[str, str], cpus: int, meminfo: str) -> tuple[str, str | None]:
+    """(master, driver memory) for a host with ``cpus`` CPUs and the
+    given ``/proc/meminfo`` text: ``local[cpus]`` and half of MemTotal,
+    unless ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` override
+    them. Memory is None (Spark's own default) when MemTotal is unknown."""
+    master = f"local[{int(env.get('SPARK_GRAFT_CPUS') or cpus)}]"
+    memory = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if memory is None:
+        for line in meminfo.splitlines():
+            if line.startswith("MemTotal:"):
+                memory = f"{int(line.split()[1]) // 2048}m"  # kB → half, in MiB
+    return master, memory
+
+
 def get_spark(
     app_name: str = "plwordnet-spark",
     master: str | None = None,
@@ -72,14 +104,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the core count — on a real cluster
-    this would be ~2-3x total cores; matching cores avoids tiny-partition
-    overhead at local scale while AQE coalesces further at runtime.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else one core
+    per usable host CPU; driver memory to ``$SPARK_GRAFT_DRIVER_MEM``,
+    else half the host's physical memory. ``shuffle_partitions``
+    defaults to the core count — on a real cluster this would be ~2-3x
+    total cores; matching cores avoids tiny-partition overhead at local
+    scale while AQE coalesces further at runtime.
     """
-    if master is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        master = f"local[{cpus}]"
+    default_master, driver_memory = _host_defaults(os.environ, _host_cpus(), _read_meminfo())
+    master = master or default_master
     if shuffle_partitions is None:
         shuffle_partitions = _parallelism_of(master)
 
@@ -94,11 +127,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if driver_memory is not None:
+        builder = builder.config("spark.driver.memory", driver_memory)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
@@ -115,13 +149,10 @@ def stop_spark() -> None:
 
 
 def _parallelism_of(master: str) -> int:
-    """Parse N out of local[N]; fall back to 32."""
+    """Parse N out of local[N]; fall back to the host's CPU count."""
     if master.startswith("local[") and master.endswith("]"):
-        inner = master[len("local[") : -1]
-        if inner == "*":
-            return os.cpu_count() or 32
         try:
-            return int(inner)
+            return int(master[len("local[") : -1])
         except ValueError:
             pass
-    return 32
+    return _host_cpus()

@@ -27,13 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from plwordnet_spark.corpus import PAGES_SCHEMA
-from plwordnet_spark.extraction.udfs import extract_links_udf
+from plwordnet_spark.graph.build import hash_pairs, link_pairs
 from plwordnet_spark.storage.snapshots import SnapshotStore
 
 __all__ = ["read_page_stream", "stream_pages_to_edges", "EdgeLog"]
-
-REL_INTRA_DOMAIN = 1
-REL_CROSS_DOMAIN = 2
 
 _EDGE_COLS = ("src", "dst", "rel_id", "weight")
 
@@ -50,29 +47,9 @@ def read_page_stream(
 
 
 def _batch_edges(pages: DataFrame) -> DataFrame:
-    """One micro-batch of pages → (src, dst, rel_id, weight) edges.
-    Same derivation as graph.build.build_graph's link_pairs stage."""
-    dom = lambda c: F.lower(  # noqa: E731
-        F.split_part(F.split_part(c, F.lit("//"), F.lit(2)), F.lit("/"), F.lit(1))
-    )
-    return (
-        pages.select(
-            F.col("url").alias("src_url"),
-            F.explode(extract_links_udf(F.col("html"))).alias("dst_url"),
-        )
-        .withColumn(
-            "rel_id",
-            F.when(dom(F.col("src_url")) == dom(F.col("dst_url")), F.lit(REL_INTRA_DOMAIN))
-            .otherwise(F.lit(REL_CROSS_DOMAIN)),
-        )
-        .select(
-            F.xxhash64("src_url").alias("src"),
-            F.xxhash64("dst_url").alias("dst"),
-            "rel_id",
-        )
-        .groupBy("src", "dst", "rel_id")
-        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
-    )
+    """One micro-batch of pages → (src, dst, rel_id, weight) edges, by
+    the same derivation as ``graph.build.build_graph``."""
+    return hash_pairs(link_pairs(pages))
 
 
 class EdgeLog:

@@ -88,18 +88,17 @@ def test_pagerank_matches_networkx(spark, graphs):
             )
 
 
-def test_pagerank_weighted_and_salted(spark):
+def test_pagerank_weighted(spark):
     g = nx.DiGraph()
     weighted_edges = [(0, 1, 3.0), (0, 2, 1.0), (1, 2, 2.0), (2, 0, 1.0), (3, 0, 5.0)]
     g.add_weighted_edges_from(weighted_edges)
     edges = _edges_df(spark, [(u, v) for u, v, _ in weighted_edges],
                       [w for _, _, w in weighted_edges])
-    for salted in (False, True):
-        result = pagerank(spark, edges, tol=1e-9, salted_gather=salted, n_salts=4)
-        got = {r.id: r.rank for r in result.state.collect()}
-        expected = _pagerank_oracle(g, alpha=0.85, tol=1e-9)
-        for node, rank in expected.items():
-            assert math.isclose(got[int(node)], rank, abs_tol=1e-6), (salted, node)
+    result = pagerank(spark, edges, tol=1e-9)
+    got = {r.id: r.rank for r in result.state.collect()}
+    expected = _pagerank_oracle(g, alpha=0.85, tol=1e-9)
+    for node, rank in expected.items():
+        assert math.isclose(got[int(node)], rank, abs_tol=1e-6), node
 
 
 def test_connected_components_exact(spark, graphs):
@@ -268,24 +267,6 @@ def pagerank_resume_helper(spark, edges, nodes, state, start_iter):
         initial_ranks=state, start_iteration=start_iter,
     )
     return result.state
-
-
-def test_pagerank_csr_equals_join_path(spark, tmp_path):
-    """Per-partition CSR gather must be numerically identical (1e-12) to
-    the join gather (SURVEY.md §7 stage 3 property test)."""
-    g = nx.gnp_random_graph(150, 0.04, seed=SEED, directed=True)
-    edges = _edges_df(spark, g.edges())
-    nodes = spark.createDataFrame([(int(n),) for n in g.nodes()], "id long")
-    join_res = pagerank(spark, edges, nodes=nodes, tol=1e-9, max_iterations=100)
-    csr_res = pagerank(
-        spark, edges, nodes=nodes, tol=1e-9, max_iterations=100,
-        use_csr=True, csr_workdir=str(tmp_path / "csr"), csr_buckets=4,
-    )
-    a = {r.id: r.rank for r in join_res.state.collect()}
-    b = {r.id: r.rank for r in csr_res.state.collect()}
-    assert set(a) == set(b)
-    for node_id, rank in a.items():
-        assert math.isclose(b[node_id], rank, abs_tol=1e-12), node_id
 
 
 class TestIncrementalComponents:

@@ -1,4 +1,4 @@
-"""Graph construction: edge/node tables, dedup, degrees, salting,
+"""Graph construction: edge/node tables, dedup, degrees, hub flags,
 cohesion validation (db_to_nx.py:286-391 analog)."""
 
 from __future__ import annotations
@@ -45,11 +45,12 @@ def test_build_graph_matches_oracle(spark):
     pages.unpersist()
 
 
-def test_degrees_and_salt(spark):
+def test_degrees_and_edge_schema(spark):
     pages = generate_pages(spark, N_PAGES, SEED)
-    tables = build_graph(pages, hub_degree_threshold=10, n_salts=8)
+    tables = build_graph(pages, hub_degree_threshold=10)
     nodes = tables.nodes.cache()
     edges = tables.edges.cache()
+    assert edges.columns == ["src", "dst", "rel_id", "weight"]
     # out_degree on nodes equals count of edges per src
     chk = (
         edges.groupBy(F.col("src").alias("id"))
@@ -59,14 +60,9 @@ def test_degrees_and_salt(spark):
         .count()
     )
     assert chk == 0
-    # hubs exist in the power-law corpus, and only hub-dst edges are salted
-    hubs = nodes.filter("is_hub").count()
-    assert hubs > 0
-    hub_ids = {r.id for r in nodes.filter("is_hub").select("id").collect()}
-    for row in edges.filter("salt != 0").select("dst").distinct().collect():
-        assert row.dst in hub_ids
-    salted = edges.filter("salt != 0")
-    assert salted.select("salt").distinct().count() > 1
+    # hubs exist in the power-law corpus: is_hub is in_degree >= threshold
+    assert nodes.filter("is_hub").count() > 0
+    assert nodes.filter((F.col("in_degree") >= 10) != F.col("is_hub")).count() == 0
     nodes.unpersist()
     edges.unpersist()
 

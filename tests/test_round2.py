@@ -3,14 +3,13 @@
 Covers: LSH plan size at production dims, MinHash CC node restriction,
 deterministic negative cap, reference-exact balance arithmetic, the
 model-encoder UDF seam (per-process single load), pluggable sentence
-splitter, snapshot retention + resume, CSR re-stage invalidation,
+splitter, snapshot retention + resume,
 SimHash max_hamming recall guarantee, and idempotent streaming replay.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import numpy as np
@@ -269,37 +268,6 @@ def test_snapshot_prune_keeps_newest(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# CSR re-stage invalidation (ADVICE low #2)
-# ---------------------------------------------------------------------------
-
-def test_csr_restage_same_workdir_not_stale(spark, tmp_path):
-    from plwordnet_spark.graph.pagerank import pagerank
-
-    workdir = str(tmp_path / "csr")
-
-    def ring_edges(n, skip):
-        return spark.range(n).select(
-            F.col("id").alias("src"),
-            F.pmod(F.col("id") + skip, F.lit(n)).alias("dst"),
-        ).filter("src != dst")
-
-    e1 = ring_edges(40, 1)
-    e2 = ring_edges(60, 7)  # different graph, SAME workdir
-    r1 = pagerank(spark, e1, tol=1e-10, max_iterations=30, weighted=False,
-                  use_csr=True, csr_workdir=workdir)
-    r2_csr = pagerank(spark, e2, tol=1e-10, max_iterations=30, weighted=False,
-                      use_csr=True, csr_workdir=workdir)
-    r2_join = pagerank(spark, e2, tol=1e-10, max_iterations=30, weighted=False)
-    assert r1.state.count() == 40
-    got = {r.id: r.rank for r in r2_csr.state.collect()}
-    want = {r.id: r.rank for r in r2_join.state.collect()}
-    assert set(got) == set(want) and len(got) == 60
-    for k in want:
-        assert got[k] == pytest.approx(want[k], abs=1e-12)
-    shutil.rmtree(workdir, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
 # SimHash max_hamming guard (ADVICE low #5)
 # ---------------------------------------------------------------------------
 
@@ -413,41 +381,3 @@ def test_pagerank_warm_start_after_edge_merge(spark):
     want = {r.id: r.rank for r in cold.state.collect()}
     for n, v in want.items():
         assert got[n] == pytest.approx(v, abs=1e-8)
-
-
-def test_csr_restage_not_stale_under_dynamic_overwrite(spark, tmp_path):
-    """The npz side files the CSR loader publishes carry the stage
-    token in their NAME: under dynamic partition-overwrite (where a
-    re-stage does NOT truncate the staging dir, so loose side files
-    survive) a second stage() into the same workdir must never serve
-    the first graph's preprocessed blocks."""
-    from plwordnet_spark.graph.pagerank import pagerank
-
-    workdir = str(tmp_path / "csr_dyn")
-
-    def ring_edges(n, skip):
-        return spark.range(n).select(
-            F.col("id").alias("src"),
-            F.pmod(F.col("id") + skip, F.lit(n)).alias("dst"),
-        ).filter("src != dst")
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        r1 = pagerank(spark, ring_edges(40, 1), tol=1e-10, max_iterations=20,
-                      weighted=False, use_csr=True, csr_workdir=workdir)
-        assert r1.state.count() == 40
-        # side files from stage 1 linger under dynamic overwrite; the
-        # second run's loads must key past them
-        r2_csr = pagerank(spark, ring_edges(60, 7), tol=1e-10, max_iterations=20,
-                          weighted=False, use_csr=True, csr_workdir=workdir)
-        r2_join = pagerank(spark, ring_edges(60, 7), tol=1e-10,
-                           max_iterations=20, weighted=False)
-        got = {r.id: r.rank for r in r2_csr.state.collect()}
-        want = {r.id: r.rank for r in r2_join.state.collect()}
-        assert set(got) == set(want) and len(got) == 60
-        for k in want:
-            assert got[k] == pytest.approx(want[k], abs=1e-12)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        shutil.rmtree(workdir, ignore_errors=True)

@@ -425,42 +425,6 @@ def test_incremental_ingest_to_warm_pagerank(spark, tmp_path):
         assert got[k] == pytest.approx(v, abs=1e-8)
 
 
-# --- hot-src split join: identical ranks, out-degree skew handled ---------
-
-
-def test_pagerank_hot_src_split_matches_plain(spark):
-    """The hot-src split (round-robin hot slice + broadcast hot ranks)
-    must produce identical ranks to the co-partitioned join, including
-    on a graph where one src owns a large share of all edges."""
-    from plwordnet_spark.graph.pagerank import pagerank
-
-    rng = random.Random(11)
-    n = 60
-    rows = [(rng.randrange(n), rng.randrange(n), 1.0) for _ in range(240)]
-    # hub src 0: out-edges to half the graph (way above any threshold)
-    rows += [(0, d, 1.0) for d in range(1, n, 2)]
-    rows = [(s, d, w) for s, d, w in rows if s != d]
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
-
-    plain = pagerank(spark, edges, tol=1e-10, max_iterations=40)
-    split = pagerank(
-        spark, edges, tol=1e-10, max_iterations=40, hot_src_threshold=10
-    )
-    want = {r.id: r.rank for r in plain.state.collect()}
-    got = {r.id: r.rank for r in split.state.collect()}
-    assert got.keys() == want.keys()
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
-    assert split.iterations == plain.iterations
-    # threshold above every out-degree = no split, same code path result
-    nosplit = pagerank(
-        spark, edges, tol=1e-10, max_iterations=40, hot_src_threshold=10**9
-    )
-    got2 = {r.id: r.rank for r in nosplit.state.collect()}
-    for k in want:
-        assert abs(got2[k] - want[k]) < 1e-12
-
-
 # --- bucketed point lookup prunes to one bucket ---------------------------
 
 

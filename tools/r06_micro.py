@@ -78,13 +78,6 @@ def main() -> None:
         return pagerank(spark, big, tol=0.0, max_iterations=10,
                         auto_tune=False, check_interval=5)
 
-    def op_pr_big_csr():
-        from plwordnet_spark.graph.pagerank import pagerank
-
-        big = need_big()
-        return pagerank(spark, big, tol=0.0, max_iterations=10,
-                        auto_tune=False, check_interval=5, use_csr=True)
-
     def op_bfs_big():
         from plwordnet_spark.graph.bfs import bfs_distances
 
@@ -98,13 +91,6 @@ def main() -> None:
         t = need_corpus()
         return pagerank(spark, t.edges, nodes=t.nodes, tol=1e-6,
                         max_iterations=60)
-
-    def op_pr_csr():
-        from plwordnet_spark.graph.pagerank import pagerank
-
-        t = need_corpus()
-        return pagerank(spark, t.edges, nodes=t.nodes, tol=1e-6,
-                        max_iterations=60, use_csr=True)
 
     def op_cc():
         from plwordnet_spark.graph.components import connected_components
@@ -175,10 +161,8 @@ def main() -> None:
 
     table = {
         "pr_big": op_pr_big,
-        "pr_big_csr": op_pr_big_csr,
         "bfs_big": op_bfs_big,
         "pr_conv": op_pr_conv,
-        "pr_csr": op_pr_csr,
         "cc": op_cc,
         "bfs": op_bfs,
         "hits": op_hits,

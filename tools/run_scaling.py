@@ -317,8 +317,8 @@ def cmd_report(_args) -> None:
         "- Why the design scales on a real cluster: per iteration the only",
         "  cross-executor traffic is the rank vector (rows ∝ nodes), not",
         "  the edge table (cached partition-local, rows ∝ edges ≈ 10-40x",
-        "  nodes); gather uses map-side partial aggregation; hub skew is",
-        "  salted; the CSR path cuts JVM↔Python traffic to ranks only.",
+        "  nodes); gather uses map-side partial aggregation, which also",
+        "  absorbs hub in-degree skew.",
         "- Convergence checks every 5 iterations (check_interval=5) — the",
         "  production setting for throughput runs; correctness-mode",
         "  (per-iteration L1, networkx-equivalent) is what tests verify.",
