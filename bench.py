@@ -445,7 +445,7 @@ def main() -> None:
                     "pagerank_skew_unsalted",
                     lambda: pagerank(
                         spark, skewed, tol=0.0, max_iterations=skew_iters,
-                        auto_tune=False, check_interval=5,
+                        check_interval=5,
                     ),
                 ),
             ],
@@ -491,7 +491,7 @@ def main() -> None:
                     "pagerank_srcskew_plain",
                     lambda: pagerank(
                         spark, srcskew, tol=0.0, max_iterations=ss_iters,
-                        auto_tune=False, check_interval=5,
+                        check_interval=5,
                     ),
                 ),
             ],
@@ -534,7 +534,7 @@ def main() -> None:
         def _pr_big():
             return pagerank(
                 spark, big, tol=0.0, max_iterations=big_iters,
-                auto_tune=False, check_interval=5,
+                check_interval=5,
             )
 
         # frontier-based BFS on the same graph: per-round cost must track

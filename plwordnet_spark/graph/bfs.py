@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
+from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
 from plwordnet_spark.storage.snapshots import SnapshotStore
 
 __all__ = [
@@ -102,7 +102,6 @@ def _min_plus_loop(
     rel: DataFrame,  # (u, v, w) cached relaxation edges
     ids: DataFrame,  # cached node universe
     init: DataFrame,  # SPARSE (id, dist): source rows only, dist set
-    n_rel: int,
     max_iterations: int,
     checkpoint_dir: str | None,
     checkpoint_interval: int,
@@ -174,14 +173,13 @@ def _min_plus_loop(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n_rel):
-        res = runner.run(
-            init.withColumn("changed", F.lit(True)), step, delta
-        )
-        # dense contract fill: one row per node, NULL dist = unreachable
-        state = ids.join(
-            res.state.select("id", "dist").hint("shuffle_hash"), "id", "left"
-        ).localCheckpoint(eager=True)
+    res = runner.run(
+        init.withColumn("changed", F.lit(True)), step, delta
+    )
+    # dense contract fill: one row per node, NULL dist = unreachable
+    state = ids.join(
+        res.state.select("id", "dist").hint("shuffle_hash"), "id", "left"
+    ).localCheckpoint(eager=True)
     rel.unpersist()
     ids.unpersist()
     return PregelResult(
@@ -209,14 +207,14 @@ def bfs_distances(
         .withColumn("w", F.lit(1).cast("long"))
         .cache()  # already hash(u)-partitioned by _unweighted_rel
     )
-    n_rel = rel.count()
+    rel.count()
     # sparse init: source rows only (semi join keeps the old behavior of
     # dropping sources outside the node universe)
     init = src_ids.join(ids, "id", "left_semi").withColumn(
         "dist", F.lit(0).cast("long")
     )
     return _min_plus_loop(
-        spark, rel, ids, init, n_rel, max_iterations,
+        spark, rel, ids, init, max_iterations,
         checkpoint_dir, checkpoint_interval,
     )
 
@@ -252,7 +250,7 @@ def landmark_distances(
     (parity with :func:`bfs_distances`).
     """
     rel = _unweighted_rel(edges, directed).cache()  # hash(u)-partitioned
-    n_rel = rel.count()
+    rel.count()
     # restrict landmarks to the graph's node universe — a landmark id
     # absent from the edge set must not emit a phantom (lm, lm, 0) row
     # (matches per-source bfs_distances, whose ids join drops it, and
@@ -303,9 +301,8 @@ def landmark_distances(
         spark, max_iterations=max_iterations, tol=0.5,
         checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n_rel):
-        res = runner.run(init, step, delta)
-        state = res.state.select("id", F.col("lm").alias("landmark"), "dist")
+    res = runner.run(init, step, delta)
+    state = res.state.select("id", F.col("lm").alias("landmark"), "dist")
     rel.unpersist()
     return PregelResult(
         state=state, iterations=res.iterations, converged=res.converged,
@@ -370,7 +367,7 @@ def delta_stepping_sssp(
     # no re-exchange is needed on either slice
     light = rel.filter(F.col("w") <= F.lit(delta)).cache()
     heavy = rel.filter(F.col("w") > F.lit(delta)).cache()
-    n_light = light.count()
+    light.count()
     n_heavy = heavy.count()
 
     metrics: list[dict] = []
@@ -481,57 +478,56 @@ def delta_stepping_sssp(
         # dropped by the next _relax select / the final projection
         state = new_state
 
-    with loop_tuning(spark, n_light):
-        if pending_heavy_bucket is not None and rounds < max_rounds:
-            # resume landed on a drain-round snapshot: finish the killed
-            # bucket's heavy phase before re-entering the outer loop
-            _heavy_round(pending_heavy_bucket)
+    if pending_heavy_bucket is not None and rounds < max_rounds:
+        # resume landed on a drain-round snapshot: finish the killed
+        # bucket's heavy phase before re-entering the outer loop
+        _heavy_round(pending_heavy_bucket)
+    while rounds < max_rounds:
+        # next bucket = floor(min pending dist / Δ); the minimum
+        # pending distance is final (no smaller pending node exists
+        # to improve it), so the bucket choice is safe
+        min_pending = state.filter("changed").agg(F.min("dist")).first()[0]
+        if min_pending is None:
+            converged = True
+            break
+        bucket = int(min_pending // delta)
+        in_bucket = F.col("dist") < F.lit((bucket + 1) * delta)
+        # inner: light-edge fixpoint within the bucket
         while rounds < max_rounds:
-            # next bucket = floor(min pending dist / Δ); the minimum
-            # pending distance is final (no smaller pending node exists
-            # to improve it), so the bucket choice is safe
-            min_pending = state.filter("changed").agg(F.min("dist")).first()[0]
-            if min_pending is None:
-                converged = True
+            rounds += 1
+            new_state = _relax(in_bucket, light, clear_emitted=True)
+            new_state = new_state.localCheckpoint(eager=True)
+            active = new_state.filter(F.col("changed") & in_bucket).count()
+            entry = {"iteration": rounds, "bucket": bucket, "phase": "light",
+                     "frontier_rows": active, "delta": float(active)}
+            metrics.append(entry)
+            _snapshot(new_state, entry)
+            state.unpersist()
+            state = new_state
+            if active == 0:
                 break
-            bucket = int(min_pending // delta)
-            in_bucket = F.col("dist") < F.lit((bucket + 1) * delta)
-            # inner: light-edge fixpoint within the bucket
-            while rounds < max_rounds:
-                rounds += 1
-                new_state = _relax(in_bucket, light, clear_emitted=True)
-                new_state = new_state.localCheckpoint(eager=True)
-                active = new_state.filter(F.col("changed") & in_bucket).count()
-                entry = {"iteration": rounds, "bucket": bucket, "phase": "light",
-                         "frontier_rows": active, "delta": float(active)}
-                metrics.append(entry)
-                _snapshot(new_state, entry)
-                state.unpersist()
-                state = new_state
-                if active == 0:
-                    break
-            # max_rounds is an exact budget (the kill point for the
-            # resume contract): stop before the heavy relax overshoots
-            if rounds >= max_rounds:
-                break
-            # bucket drained: one heavy relax from its settled nodes —
-            # skipped entirely when the graph has no heavy edges (e.g. Δ
-            # above the max weight, where delta-stepping degrades to
-            # plain frontier Bellman-Ford)
-            if n_heavy == 0:
-                continue
-            _heavy_round(bucket)
-        if store is not None:
-            # final durable snapshot so resume() always sees the end
-            # state, whether the loop converged or hit the round budget
-            last = store.manifest()[-1] if store.manifest() else None
-            if last is None or last["iteration"] != rounds:
-                store.write(
-                    state.select("id", "dist", "changed"),
-                    rounds,
-                    metrics[-1] if metrics else {"converged": converged},
-                )
-        final = state.select("id", "dist")
+        # max_rounds is an exact budget (the kill point for the
+        # resume contract): stop before the heavy relax overshoots
+        if rounds >= max_rounds:
+            break
+        # bucket drained: one heavy relax from its settled nodes —
+        # skipped entirely when the graph has no heavy edges (e.g. Δ
+        # above the max weight, where delta-stepping degrades to
+        # plain frontier Bellman-Ford)
+        if n_heavy == 0:
+            continue
+        _heavy_round(bucket)
+    if store is not None:
+        # final durable snapshot so resume() always sees the end
+        # state, whether the loop converged or hit the round budget
+        last = store.manifest()[-1] if store.manifest() else None
+        if last is None or last["iteration"] != rounds:
+            store.write(
+                state.select("id", "dist", "changed"),
+                rounds,
+                metrics[-1] if metrics else {"converged": converged},
+            )
+    final = state.select("id", "dist")
     light.unpersist()
     heavy.unpersist()
     ids.unpersist()
@@ -558,10 +554,10 @@ def sssp_distances(
     src_ids = _source_ids(spark, sources)
     ids = _node_ids(edges, nodes)
     rel = _weighted_rel(edges, weight_col, directed).cache()  # hash(u)-partitioned
-    n_rel = rel.count()
+    rel.count()
     init = src_ids.join(ids, "id", "left_semi").withColumn("dist", F.lit(0.0))
     return _min_plus_loop(
-        spark, rel, ids, init, n_rel, max_iterations,
+        spark, rel, ids, init, max_iterations,
         checkpoint_dir, checkpoint_interval,
     )
 

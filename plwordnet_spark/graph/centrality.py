@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from plwordnet_spark.graph.bfs import landmark_distances
-from plwordnet_spark.graph.pregel import PregelResult, PregelRunner, loop_tuning
+from plwordnet_spark.graph.pregel import PregelResult, PregelRunner
 
 __all__ = [
     "betweenness_centrality",
@@ -207,8 +207,7 @@ def eigenvector_centrality(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n_nodes):
-        result = runner.run(init, step, delta if tol else None)
+    result = runner.run(init, step, delta if tol else None)
     ids.unpersist()
     links.unpersist()
     return PregelResult(

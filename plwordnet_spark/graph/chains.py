@@ -36,7 +36,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelResult, PregelRunner, loop_tuning
+from plwordnet_spark.graph.pregel import PregelResult, PregelRunner
 
 __all__ = ["resolve_chains"]
 
@@ -112,8 +112,7 @@ def resolve_chains(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n):
-        result = runner.run(init, step, delta)
+    result = runner.run(init, step, delta)
 
     srcs = edges.select("src").distinct()
     resolved = (

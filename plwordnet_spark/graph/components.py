@@ -105,12 +105,11 @@ def connected_components(
         .cache()
     )
     und = _symmetrize(edges)
-    # NOTE (r6, measured): unlike the node-state loops, CC deliberately
-    # keeps AQE + session shuffle widths. Its state is the EDGE set and
-    # shrinks every round, so AQE's runtime coalescing is load-bearing —
-    # a variant sweep (hint × AQE × partitions, OPTIMIZATION_r06.md)
-    # showed fixed 32-partition/no-AQE rounds 2× slower and a
-    # loop_tuning-style narrow fixed width no better than AQE.
+    # NOTE (r6, measured): CC's state is the EDGE set and shrinks every
+    # round, so AQE's runtime coalescing is load-bearing — a variant
+    # sweep (hint × AQE × partitions, OPTIMIZATION_r06.md) showed fixed
+    # 32-partition/no-AQE rounds 2× slower and a narrow fixed width no
+    # better than AQE.
 
     if method == "hashmin":
         result = _hashmin(spark, und, ids, max_iterations, checkpoint_dir, checkpoint_interval)

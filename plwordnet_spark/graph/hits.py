@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
+from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
 
 __all__ = ["hits"]
 
@@ -62,7 +62,7 @@ def hits(
         edges.select("src", "dst").filter("src != dst")
         .repartition("src").dropDuplicates(["src", "dst"]).cache()
     )
-    n_links = links.count()
+    links.count()
     # second copy of the edge cache laid out for the hub gather: the
     # auth→hub half-round joins on dst, and without this the src-
     # partitioned cache was re-exchanged by dst EVERY iteration
@@ -179,26 +179,24 @@ def hits(
         checkpoint_interval=checkpoint_interval,
         check_interval=check_interval,
     )
-    with loop_tuning(spark, n_links):
-        # fixed-k mode (tol<=0 can never satisfy delta<tol): drop the
-        # delta callable so no convergence action runs at all — each
-        # iteration is exactly one materializing job
-        res = runner.run(init, step, delta if tol > 0 else None)
-        _release_caches()
-        # ONE dense fill over the node universe, after the loop: sparse
-        # hub/authority rows land on ids, absences are exact 0.0s
-        state = (
-            ids.join(res.state, "id", "left")
-            .join(_auth_of(res.state), "id", "left")
-            .select(
-                "id",
-                F.coalesce("hub", F.lit(0.0)).alias("hub"),
-                F.coalesce("authority", F.lit(0.0)).alias("authority"),
-            )
-            .localCheckpoint(eager=True)
-        )  # materialize INSIDE the tuned block
-        # (configs apply at action time) and before releasing caches
-        _release_caches()
+    # fixed-k mode (tol<=0 can never satisfy delta<tol): drop the
+    # delta callable so no convergence action runs at all — each
+    # iteration is exactly one materializing job
+    res = runner.run(init, step, delta if tol > 0 else None)
+    _release_caches()
+    # ONE dense fill over the node universe, after the loop: sparse
+    # hub/authority rows land on ids, absences are exact 0.0s
+    state = (
+        ids.join(res.state, "id", "left")
+        .join(_auth_of(res.state), "id", "left")
+        .select(
+            "id",
+            F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            F.coalesce("authority", F.lit(0.0)).alias("authority"),
+        )
+        .localCheckpoint(eager=True)
+    )  # materialize before releasing caches
+    _release_caches()
     links.unpersist()
     links_by_dst.unpersist()
     ids.unpersist()

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelResult, PregelRunner, loop_tuning
+from plwordnet_spark.graph.pregel import PregelResult, PregelRunner
 
 __all__ = ["katz_centrality"]
 
@@ -108,8 +108,7 @@ def katz_centrality(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n_nodes):
-        result = runner.run(init, step, delta if tol else None)
+    result = runner.run(init, step, delta if tol else None)
 
     out = result.state
     if normalize:

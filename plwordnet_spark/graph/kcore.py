@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
+from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
 
 __all__ = ["k_core"]
 
@@ -56,11 +56,8 @@ def k_core(
     )
     # seed with the INITIAL state's fingerprint: a graph that already is
     # its own k-core converges in one round (and max_iterations=1 on a
-    # fixpoint input reports converged=True); the count doubles as the
-    # loop-tuning size hint
-    init_fp = _fingerprint(und)
-    last_fp = {"fp": init_fp}
-    n_und = init_fp[0]
+    # fixpoint input reports converged=True)
+    last_fp = {"fp": _fingerprint(und)}
 
     def step(e: DataFrame) -> DataFrame:
         deg = (
@@ -100,14 +97,13 @@ def k_core(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n_und):
-        res = runner.run(und, step, delta)
-        core_nodes = (
-            res.state.select(F.col("a").alias("id"))
-            .unionByName(res.state.select(F.col("b").alias("id")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    res = runner.run(und, step, delta)
+    core_nodes = (
+        res.state.select(F.col("a").alias("id"))
+        .unionByName(res.state.select(F.col("b").alias("id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     und.unpersist()
     return PregelResult(
         state=core_nodes,

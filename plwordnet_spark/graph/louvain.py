@@ -38,8 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import loop_tuning, tuned_width
-
 __all__ = ["louvain_move_phase", "contract_graph", "louvain"]
 
 
@@ -92,7 +90,6 @@ def louvain_move_phase(
     bidir = und.select(F.col("a").alias("i"), F.col("b").alias("j"), "w").unionByName(
         und.select(F.col("b").alias("i"), F.col("a").alias("j"), "w")
     )
-    n_adj = 2 * und.count()
     deg = (
         bidir.select(F.col("i").alias("id"), F.col("w").alias("k2"))
         .unionByName(
@@ -106,17 +103,17 @@ def louvain_move_phase(
     )
     deg.count()
     # the adjacency carries the static degree k of its SOURCE endpoint
-    # (one join, once) and is cached partitioned by j at EXACTLY the
-    # loop's shuffle width — the per-round labels join on j then reuses
-    # the cached layout with zero adjacency exchange (guide §2.4), and
+    # (one join, once) and is cached hash-partitioned by j at the
+    # session's shuffle width — the per-round labels join on j shuffles
+    # to that same width, so it reuses the cached layout with zero
+    # adjacency exchange (guide §2.4), and
     # carrying k here is what lets the round drop its per-round
     # node-attach join (see the loop comment below)
-    width = tuned_width(spark, n_adj)
     adj = (
         bidir.join(
             deg.select(F.col("id").alias("i"), "k").hint("shuffle_hash"), "i"
         )
-        .repartition(width, "j")
+        .repartition("j")
         .cache()
     )
     adj.count()
@@ -141,105 +138,104 @@ def louvain_move_phase(
         labels = deg.select("id", F.col("id").alias("label")).localCheckpoint(
             eager=True
         )
-    with loop_tuning(spark, n_adj):
-        for r in range(start_round + 1, rounds + 1):
-            tot = (
-                labels.join(deg, "id")
-                .groupBy(F.col("label").alias("c"))
-                .agg(F.sum("k").alias("t"))
+    for r in range(start_round + 1, rounds + 1):
+        tot = (
+            labels.join(deg, "id")
+            .groupBy(F.col("label").alias("c"))
+            .agg(F.sum("k").alias("t"))
+        )
+        # ONE merged gather (round-6 rework; measured at 24M edges —
+        # the old shape moved the ~edge-count candidate table through
+        # FIVE exchanges per round: nbr agg, a re-agg after the
+        # own-row union, a labels attach by id, the tot attach by c,
+        # and the argmax window). Three structural changes, all
+        # result-exact for the integer-valued weights the replay
+        # contract assumes (extra +0.0 rows and regrouped exact sums
+        # cannot change a value; max(k) over a constant-per-id
+        # column equals the joined k; the is_own flag IS the old
+        # c == label predicate because exactly the own rows carry
+        # it):
+        # 1. own-community rows (kic=0, flag=1) union INTO the one
+        #    gather aggregation — no second agg, and max(flag)
+        #    replaces the per-round labels re-attach by id;
+        # 2. the adjacency already carries k — no per-round deg
+        #    join;
+        # 3. the labels join keys on j against the j-partitioned
+        #    cached adjacency at the loop's exact width — zero
+        #    adjacency exchange (hint per guide §3.1: the
+        #    checkpointed label side has no size estimate).
+        # tot stays shuffle-hash-hinted: round 1's community table
+        # is node-count-sized, a broadcast there is the driver-OOM
+        # shape at cluster scale.
+        edge_rows = adj.join(
+            labels.select(
+                F.col("id").alias("j"), F.col("label").alias("c")
+            ).hint("shuffle_hash"),
+            "j",
+        ).select(
+            F.col("i").alias("id"),
+            "c",
+            F.col("w").alias("kic"),
+            "k",
+            F.lit(0).alias("own"),
+        )
+        own_rows = labels.join(deg, "id").select(
+            "id",
+            F.col("label").alias("c"),
+            F.lit(0.0).alias("kic"),
+            "k",
+            F.lit(1).alias("own"),
+        )
+        cand = (
+            edge_rows.unionByName(own_rows)
+            .groupBy("id", "c")
+            .agg(
+                F.sum("kic").alias("kic"),
+                F.max("k").alias("k"),
+                F.max("own").alias("own"),
             )
-            # ONE merged gather (round-6 rework; measured at 24M edges —
-            # the old shape moved the ~edge-count candidate table through
-            # FIVE exchanges per round: nbr agg, a re-agg after the
-            # own-row union, a labels attach by id, the tot attach by c,
-            # and the argmax window). Three structural changes, all
-            # result-exact for the integer-valued weights the replay
-            # contract assumes (extra +0.0 rows and regrouped exact sums
-            # cannot change a value; max(k) over a constant-per-id
-            # column equals the joined k; the is_own flag IS the old
-            # c == label predicate because exactly the own rows carry
-            # it):
-            # 1. own-community rows (kic=0, flag=1) union INTO the one
-            #    gather aggregation — no second agg, and max(flag)
-            #    replaces the per-round labels re-attach by id;
-            # 2. the adjacency already carries k — no per-round deg
-            #    join;
-            # 3. the labels join keys on j against the j-partitioned
-            #    cached adjacency at the loop's exact width — zero
-            #    adjacency exchange (hint per guide §3.1: the
-            #    checkpointed label side has no size estimate).
-            # tot stays shuffle-hash-hinted: round 1's community table
-            # is node-count-sized, a broadcast there is the driver-OOM
-            # shape at cluster scale.
-            edge_rows = adj.join(
-                labels.select(
-                    F.col("id").alias("j"), F.col("label").alias("c")
-                ).hint("shuffle_hash"),
-                "j",
-            ).select(
-                F.col("i").alias("id"),
-                "c",
-                F.col("w").alias("kic"),
-                "k",
-                F.lit(0).alias("own"),
-            )
-            own_rows = labels.join(deg, "id").select(
+            .join(tot.hint("shuffle_hash"), "c")
+            .select(
                 "id",
-                F.col("label").alias("c"),
-                F.lit(0.0).alias("kic"),
-                "k",
-                F.lit(1).alias("own"),
-            )
-            cand = (
-                edge_rows.unionByName(own_rows)
-                .groupBy("id", "c")
-                .agg(
-                    F.sum("kic").alias("kic"),
-                    F.max("k").alias("k"),
-                    F.max("own").alias("own"),
-                )
-                .join(tot.hint("shuffle_hash"), "c")
-                .select(
-                    "id",
-                    "c",
-                    (
-                        F.col("kic")
-                        - F.col("k")
-                        * (
-                            F.col("t")
-                            - F.when(F.col("own") == 1, F.col("k")).otherwise(
-                                F.lit(0.0)
-                            )
+                "c",
+                (
+                    F.col("kic")
+                    - F.col("k")
+                    * (
+                        F.col("t")
+                        - F.when(F.col("own") == 1, F.col("k")).otherwise(
+                            F.lit(0.0)
                         )
-                        / F.lit(m2)
-                    ).alias("score"),
-                )
+                    )
+                    / F.lit(m2)
+                ).alias("score"),
             )
-            pick = (
-                cand.withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy("id").orderBy(
-                            F.desc("score"), F.asc("c")
-                        )
-                    ),
-                )
-                .filter(F.col("_rn") == 1)
-                .select("id", F.col("c").alias("best"))
+        )
+        pick = (
+            cand.withColumn(
+                "_rn",
+                F.row_number().over(
+                    Window.partitionBy("id").orderBy(
+                        F.desc("score"), F.asc("c")
+                    )
+                ),
             )
-            active = F.pmod(F.col("id"), F.lit(2)) == F.lit((r - 1) % 2)
-            labels = (
-                labels.join(pick.hint("shuffle_hash"), "id")
-                .select(
-                    "id",
-                    F.when(active, F.col("best"))
-                    .otherwise(F.col("label"))
-                    .alias("label"),
-                )
-                .localCheckpoint(eager=True)
+            .filter(F.col("_rn") == 1)
+            .select("id", F.col("c").alias("best"))
+        )
+        active = F.pmod(F.col("id"), F.lit(2)) == F.lit((r - 1) % 2)
+        labels = (
+            labels.join(pick.hint("shuffle_hash"), "id")
+            .select(
+                "id",
+                F.when(active, F.col("best"))
+                .otherwise(F.col("label"))
+                .alias("label"),
             )
-            if store and (r % checkpoint_interval == 0 or r == rounds):
-                labels = store.write(labels, r, {"round": r})
+            .localCheckpoint(eager=True)
+        )
+        if store and (r % checkpoint_interval == 0 or r == rounds):
+            labels = store.write(labels, r, {"round": r})
     adj.unpersist()
     deg.unpersist()
     return labels

@@ -40,8 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import loop_tuning
-
 __all__ = ["maximal_independent_set", "greedy_coloring", "MIS_P", "MIS_A", "MIS_B"]
 
 MIS_P = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
@@ -77,7 +75,7 @@ def maximal_independent_set(
         .repartition("u")
         .cache()
     )
-    n_sym = sym.count()
+    sym.count()
     nodes = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
@@ -88,70 +86,66 @@ def maximal_independent_set(
     # eager localCheckpoint per round truncates the otherwise
     # exponentially nesting anti-join lineage (same device as
     # betweenness_centrality's backward sweep).
-    # loop_tuning + shuffle_hash hints: the round loop repeats a fixed
-    # plan over a shrinking state — AQE re-planning buys nothing and
-    # small-graph rounds pay pure tiny-task overhead (guide §2.4/§3.1;
-    # same discipline as hits/louvain/salsa). Every hinted side derives
-    # from a checkpointed frame (no size estimate), where the planner
-    # otherwise falls back to per-round sort-merge or driver-built
-    # broadcasts. Results are join-strategy-independent.
+    # shuffle_hash hints (guide §3.1): every hinted side derives from a
+    # checkpointed frame (no size estimate), where the planner otherwise
+    # falls back to per-round sort-merge or driver-built broadcasts.
+    # Results are join-strategy-independent.
     active = nodes.localCheckpoint(eager=True)
     winners_acc: list[DataFrame] = []
-    with loop_tuning(spark, n_sym):
-        r = 1
-        while r <= max_rounds:
-            if active.isEmpty():
-                break
-            prio = active.select("id", _priority(F.col("id"), r, seed).alias("p"))
-            # active-only adjacency for this round
-            act_edges = (
-                sym.join(
-                    prio.select(F.col("id").alias("u")).hint("shuffle_hash"),
-                    "u",
-                    "left_semi",
-                )
-                .join(
-                    prio.select(F.col("id").alias("v")).hint("shuffle_hash"),
-                    "v",
-                    "left_semi",
-                )
+    r = 1
+    while r <= max_rounds:
+        if active.isEmpty():
+            break
+        prio = active.select("id", _priority(F.col("id"), r, seed).alias("p"))
+        # active-only adjacency for this round
+        act_edges = (
+            sym.join(
+                prio.select(F.col("id").alias("u")).hint("shuffle_hash"),
+                "u",
+                "left_semi",
             )
-            nmin = (
-                act_edges.join(
-                    prio.select(
-                        F.col("id").alias("v"), F.col("p").alias("np")
-                    ).hint("shuffle_hash"),
-                    "v",
-                )
-                .groupBy(F.col("u").alias("id"))
-                .agg(F.min(F.struct(F.col("np").alias("p"), F.col("v").alias("id"))).alias("nbest"))
+            .join(
+                prio.select(F.col("id").alias("v")).hint("shuffle_hash"),
+                "v",
+                "left_semi",
             )
-            win = (
-                prio.join(nmin.hint("shuffle_hash"), "id", "left")
-                .filter(
-                    F.col("nbest").isNull()
-                    | (F.struct(F.col("p"), F.col("id")) < F.col("nbest"))
-                )
-                .select("id", F.lit(r).alias("mis_round"))
-                .localCheckpoint(eager=True)
+        )
+        nmin = (
+            act_edges.join(
+                prio.select(
+                    F.col("id").alias("v"), F.col("p").alias("np")
+                ).hint("shuffle_hash"),
+                "v",
             )
-            winners_acc.append(win)
-            # remove winners and their (full-graph) neighbourhoods
-            dead_nbrs = (
-                sym.join(
-                    win.select(F.col("id").alias("u")).hint("shuffle_hash"),
-                    "u",
-                    "left_semi",
-                )
-                .select(F.col("v").alias("id"))
-                .distinct()
+            .groupBy(F.col("u").alias("id"))
+            .agg(F.min(F.struct(F.col("np").alias("p"), F.col("v").alias("id"))).alias("nbest"))
+        )
+        win = (
+            prio.join(nmin.hint("shuffle_hash"), "id", "left")
+            .filter(
+                F.col("nbest").isNull()
+                | (F.struct(F.col("p"), F.col("id")) < F.col("nbest"))
             )
-            active = (
-                active.join(win.select("id").hint("shuffle_hash"), "id", "left_anti")
-                .join(dead_nbrs.hint("shuffle_hash"), "id", "left_anti")
-                .localCheckpoint(eager=True)
+            .select("id", F.lit(r).alias("mis_round"))
+            .localCheckpoint(eager=True)
+        )
+        winners_acc.append(win)
+        # remove winners and their (full-graph) neighbourhoods
+        dead_nbrs = (
+            sym.join(
+                win.select(F.col("id").alias("u")).hint("shuffle_hash"),
+                "u",
+                "left_semi",
             )
-            r += 1
+            .select(F.col("v").alias("id"))
+            .distinct()
+        )
+        active = (
+            active.join(win.select("id").hint("shuffle_hash"), "id", "left_anti")
+            .join(dead_nbrs.hint("shuffle_hash"), "id", "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        r += 1
 
     out = winners_acc[0] if winners_acc else nodes.select(
         "id", F.lit(0).alias("mis_round")
@@ -207,55 +201,50 @@ def greedy_coloring(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).localCheckpoint(eager=True)
     out: list[DataFrame] = []
-    # loop_tuning + hints per the MIS round loop's rationale: the color
-    # loop's own joins all ride checkpointed frames, and each color is
-    # sized by its own (shrinking) remaining edge count — the inner
-    # maximal_independent_set re-enters loop_tuning with the same count
-    # and restores on exit
+    # hints per the MIS round loop's rationale: the color loop's own
+    # joins all ride checkpointed frames
     for color in range(max_colors):
         n_left = remaining_nodes.count()
         if n_left == 0:
             break
-        n_edges = rem_edges.count()
-        with loop_tuning(spark, n_edges):
-            if n_edges == 0:
-                # conflict-free remainder: one final color for everyone
-                mis = remaining_nodes.localCheckpoint(eager=True)
-            else:
-                mis = maximal_independent_set(
-                    spark, rem_edges, seed=seed + color
-                ).select("id")
-                # isolated remainders (no surviving edges) join this MIS
-                mis = mis.unionByName(
-                    remaining_nodes.join(
-                        rem_edges.select(F.col("src").alias("id"))
-                        .distinct()
-                        .hint("shuffle_hash"),
-                        "id",
-                        "left_anti",
-                    )
-                ).distinct().localCheckpoint(eager=True)
-            out.append(mis.select("id", F.lit(color).cast("integer").alias("color")))
-            remaining_nodes = remaining_nodes.join(
-                mis.hint("shuffle_hash"), "id", "left_anti"
-            ).localCheckpoint(eager=True)
-            rem_edges = (
-                rem_edges.join(
-                    remaining_nodes.select(F.col("id").alias("src")).hint(
-                        "shuffle_hash"
-                    ),
-                    "src",
-                    "left_semi",
+        if rem_edges.isEmpty():
+            # conflict-free remainder: one final color for everyone
+            mis = remaining_nodes.localCheckpoint(eager=True)
+        else:
+            mis = maximal_independent_set(
+                spark, rem_edges, seed=seed + color
+            ).select("id")
+            # isolated remainders (no surviving edges) join this MIS
+            mis = mis.unionByName(
+                remaining_nodes.join(
+                    rem_edges.select(F.col("src").alias("id"))
+                    .distinct()
+                    .hint("shuffle_hash"),
+                    "id",
+                    "left_anti",
                 )
-                .join(
-                    remaining_nodes.select(F.col("id").alias("dst")).hint(
-                        "shuffle_hash"
-                    ),
-                    "dst",
-                    "left_semi",
-                )
-                .localCheckpoint(eager=True)
+            ).distinct().localCheckpoint(eager=True)
+        out.append(mis.select("id", F.lit(color).cast("integer").alias("color")))
+        remaining_nodes = remaining_nodes.join(
+            mis.hint("shuffle_hash"), "id", "left_anti"
+        ).localCheckpoint(eager=True)
+        rem_edges = (
+            rem_edges.join(
+                remaining_nodes.select(F.col("id").alias("src")).hint(
+                    "shuffle_hash"
+                ),
+                "src",
+                "left_semi",
             )
+            .join(
+                remaining_nodes.select(F.col("id").alias("dst")).hint(
+                    "shuffle_hash"
+                ),
+                "dst",
+                "left_semi",
+            )
+            .localCheckpoint(eager=True)
+        )
     else:
         # for/else: the loop ran out of colors without an early break.
         # That is only a failure if nodes remain — a coloring that used

@@ -20,7 +20,10 @@ Scale design:
 * ranks is the only mutable state: ``(id, rank)``, one row per node,
 * driver sees two scalars per iteration (dangling mass, L1 delta) —
   everything else stays distributed; lineage is truncated by the
-  PregelRunner.
+  PregelRunner,
+* the loop runs under the session's own config (AQE on, shuffle width
+  = core count, as ``get_spark`` sets it) and writes no session conf, so
+  a query sharing the session runs unchanged next to it.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
+from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
 
 __all__ = ["pagerank"]
 
@@ -46,7 +49,6 @@ def pagerank(
     initial_ranks: DataFrame | None = None,
     start_iteration: int = 0,
     check_interval: int = 1,
-    auto_tune: bool = True,
     retain_snapshots: int | None = None,
     personalization: DataFrame | None = None,
 ) -> PregelResult:
@@ -68,23 +70,6 @@ def pagerank(
         )
     else:
         ids = nodes.select("id").distinct()
-    # loop tuning: AQE off, right-sized shuffles. auto_tune=False keeps
-    # session-level configs (the cluster-sized setting) — used by scaling
-    # measurements where shuffle width must track cluster size
-    n_edge_rows = edge_w.count() if auto_tune else None
-    with loop_tuning(spark, n_edge_rows):
-        return _pagerank_loop(
-            spark, edge_w, ids, alpha, tol, max_iterations, checkpoint_dir,
-            checkpoint_interval, initial_ranks, start_iteration, check_interval,
-            retain_snapshots, personalization,
-        )
-
-
-def _pagerank_loop(
-    spark, edge_w, ids, alpha, tol, max_iterations, checkpoint_dir,
-    checkpoint_interval, initial_ranks, start_iteration, check_interval,
-    retain_snapshots, personalization,
-) -> PregelResult:
     ids = ids.repartition("id").cache()
     n_nodes = ids.count()
     if n_nodes == 0:

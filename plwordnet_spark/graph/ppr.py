@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
+from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
 
 __all__ = ["ppr_batch"]
 
@@ -111,7 +111,7 @@ def ppr_batch(
         .repartition("src")
         .cache()
     )
-    n_scatter = scatter.count()
+    scatter.count()
     dangling = ids.join(out_w, "id", "left_anti").cache()
     n_dangling = dangling.count()
 
@@ -180,11 +180,10 @@ def ppr_batch(
     )
     if resume and checkpoint_dir is None:
         raise ValueError("resume requires a checkpoint_dir")
-    with loop_tuning(spark, n_scatter):
-        res = runner.resume(step, delta if tol > 0 else None) if resume else None
-        if res is None:  # fresh run, or resume over an empty store
-            res = runner.run(init, step, delta if tol > 0 else None)
-        state = res.state.select("id", "seed", "rank")
+    res = runner.resume(step, delta if tol > 0 else None) if resume else None
+    if res is None:  # fresh run, or resume over an empty store
+        res = runner.run(init, step, delta if tol > 0 else None)
+    state = res.state.select("id", "seed", "rank")
     scatter.unpersist()
     dangling.unpersist()
     seeds_df.unpersist()

@@ -25,73 +25,15 @@ iteration.
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from plwordnet_spark.storage.snapshots import SnapshotStore
 
-__all__ = ["PregelRunner", "PregelResult", "loop_tuning"]
-
-# rows per shuffle partition below which task-launch overhead dominates;
-# iteration loops re-size their shuffles around this target
-_ROWS_PER_PARTITION = 50_000
-
-
-def tuned_width(spark: SparkSession, n_rows: int) -> int:
-    """The shuffle width :func:`loop_tuning` will run ``n_rows`` under —
-    lets a loop cache its big sides pre-partitioned to EXACTLY the
-    loop's width so the per-round joins reuse the cached layout instead
-    of re-exchanging it (guide §2.4: two operations keyed the same way
-    share one exchange only when the partition counts match)."""
-    default_par = spark.sparkContext.defaultParallelism
-    if n_rows < default_par * _ROWS_PER_PARTITION:
-        return max(4, min(default_par, n_rows // _ROWS_PER_PARTITION + 1))
-    return int(spark.conf.get("spark.sql.shuffle.partitions", str(default_par)))
-
-
-@contextmanager
-def loop_tuning(spark: SparkSession, n_rows: int | None):
-    """Temporarily tune the session for a small-state iteration loop.
-
-    Measured on local[32], 281k edges: AQE on + 32 shuffle partitions =
-    1.50 s/iter; AQE off + right-sized partitions = 0.60 s/iter. AQE's
-    per-stage materialization barriers and re-planning buy nothing for a
-    fixed, repeated plan (skew is handled explicitly by salting), and
-    tiny tasks pay pure launch overhead. Only applies when ``n_rows``
-    says the state is small — at production scale the session defaults
-    (AQE on, wide shuffles) stand; always restored afterwards.
-    """
-    if n_rows is None:
-        yield
-        return
-    default_par = spark.sparkContext.defaultParallelism
-    target = max(4, min(default_par, n_rows // _ROWS_PER_PARTITION + 1))
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", str(default_par))
-    small = n_rows < default_par * _ROWS_PER_PARTITION
-    try:
-        if small:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _append_plan(df: DataFrame, path: str) -> None:
-    """Append ``df``'s formatted physical plan to ``path`` (diagnostic
-    only, driven by $SPARK_GRAFT_PLAN_DUMP)."""
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-    with open(path, "a", encoding="utf-8") as fh:
-        fh.write(plan + "\n")
+__all__ = ["PregelRunner", "PregelResult"]
 
 
 @dataclass
@@ -186,11 +128,6 @@ class PregelRunner:
                 self.store is not None and iteration % self.checkpoint_interval == 0
             )
             stepped = step(state)
-            # diagnostic hook (plan-audit evidence): dump the REAL
-            # first-iteration step plan — never set in production runs
-            dump = os.environ.get("SPARK_GRAFT_PLAN_DUMP")
-            if dump and iteration == start_iteration + 1:
-                _append_plan(stepped, dump)
             # truncate BEFORE measuring delta: the delta action then reads
             # the materialized state instead of re-executing the step plan
             new_state = self._truncate(stepped, iteration, {})

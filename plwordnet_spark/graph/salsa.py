@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
+from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
 
 __all__ = ["salsa"]
 
@@ -147,8 +147,7 @@ def salsa(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n_nodes):
-        result = runner.run(init, step, delta if tol else None)
+    result = runner.run(init, step, delta if tol else None)
 
     for df in (ids, links, outd, ind):
         df.unpersist()

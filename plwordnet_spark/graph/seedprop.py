@@ -36,8 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import loop_tuning
-
 __all__ = ["seed_label_spread"]
 
 
@@ -73,7 +71,7 @@ def seed_label_spread(
         .repartition("j")
         .cache()
     )
-    n_adj = adj.count()
+    adj.count()
     node_ids = (
         adj.select(F.col("i").alias("id"))
         .unionByName(adj.select(F.col("j").alias("id")))
@@ -86,36 +84,35 @@ def seed_label_spread(
     )
     labels = seed_tbl.localCheckpoint(eager=True)
 
-    with loop_tuning(spark, n_adj):
-        for _ in range(rounds):
-            votes = (
-                adj.join(
-                    labels.select(
-                        F.col("id").alias("j"), F.col("label").alias("l")
-                    ),
-                    "j",
-                )
-                .groupBy(F.col("i").alias("id"), "l")
-                .agg(F.sum("w").alias("v"))
+    for _ in range(rounds):
+        votes = (
+            adj.join(
+                labels.select(
+                    F.col("id").alias("j"), F.col("label").alias("l")
+                ),
+                "j",
             )
-            pick = (
-                votes.withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy("id").orderBy(
-                            F.desc("v"), F.asc("l")
-                        )
-                    ),
-                )
-                .filter(F.col("_rn") == 1)
-                .select("id", F.col("l").alias("label"))
+            .groupBy(F.col("i").alias("id"), "l")
+            .agg(F.sum("w").alias("v"))
+        )
+        pick = (
+            votes.withColumn(
+                "_rn",
+                F.row_number().over(
+                    Window.partitionBy("id").orderBy(
+                        F.desc("v"), F.asc("l")
+                    )
+                ),
             )
-            # freeze-on-first-label: only nodes not yet labeled adopt
-            labels = (
-                labels.unionByName(
-                    pick.join(labels.select("id"), "id", "left_anti")
-                )
-            ).localCheckpoint(eager=True)
+            .filter(F.col("_rn") == 1)
+            .select("id", F.col("l").alias("label"))
+        )
+        # freeze-on-first-label: only nodes not yet labeled adopt
+        labels = (
+            labels.unionByName(
+                pick.join(labels.select("id"), "id", "left_anti")
+            )
+        ).localCheckpoint(eager=True)
     adj.unpersist()
     seed_tbl.unpersist()
     return labels

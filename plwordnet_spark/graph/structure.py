@@ -49,7 +49,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, loop_tuning
+from plwordnet_spark.graph.pregel import PregelRunner
 
 __all__ = [
     "reciprocity",
@@ -257,63 +257,62 @@ def strongly_connected_components(
     n_active = active_nodes.count()
     resolved: list[DataFrame] = []
 
-    with loop_tuning(spark, n_active):
-        for _phase in range(max_phases):
-            if n_active == 0:
+    for _phase in range(max_phases):
+        if n_active == 0:
+            break
+        # --- 1. trim: peel acyclic fringe ---------------------------
+        for _ in range(max_trim_iters):
+            has_out = active_edges.select(F.col("src").alias("id")).distinct()
+            has_in = active_edges.select(F.col("dst").alias("id")).distinct()
+            cyclic_candidates = has_out.join(has_in, "id", "left_semi")
+            trimmed = active_nodes.join(cyclic_candidates, "id", "left_anti")
+            n_trimmed = trimmed.count()
+            if n_trimmed == 0:
                 break
-            # --- 1. trim: peel acyclic fringe ---------------------------
-            for _ in range(max_trim_iters):
-                has_out = active_edges.select(F.col("src").alias("id")).distinct()
-                has_in = active_edges.select(F.col("dst").alias("id")).distinct()
-                cyclic_candidates = has_out.join(has_in, "id", "left_semi")
-                trimmed = active_nodes.join(cyclic_candidates, "id", "left_anti")
-                n_trimmed = trimmed.count()
-                if n_trimmed == 0:
-                    break
-                resolved.append(
-                    trimmed.select("id", F.col("id").alias("component"))
-                    .localCheckpoint(eager=True)
-                )
-                active_nodes = active_nodes.join(
-                    trimmed, "id", "left_anti"
-                ).localCheckpoint(eager=True)
-                active_edges = (
-                    active_edges.join(
-                        active_nodes.select(F.col("id").alias("src")), "src", "left_semi"
-                    )
-                    .join(
-                        active_nodes.select(F.col("id").alias("dst")), "dst", "left_semi"
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                n_active -= n_trimmed
-            if n_active == 0:
-                break
-            # --- 2. forward min-color to fixpoint -----------------------
-            colors = active_nodes.select("id", F.col("id").alias("color"))
-            colored = _fixpoint_min_color(spark, active_edges, colors, max_prop_iters)
-            # --- 3. backward reach-root within color class --------------
-            marked = _fixpoint_reach_root(active_edges, colored, max_prop_iters)
-            extracted = (
-                marked.filter("reached")
-                .select("id", F.col("color").alias("component"))
+            resolved.append(
+                trimmed.select("id", F.col("id").alias("component"))
                 .localCheckpoint(eager=True)
             )
-            n_extracted = extracted.count()
-            resolved.append(extracted)
-            marked.unpersist()
-            # --- 4. shrink active subgraph ------------------------------
             active_nodes = active_nodes.join(
-                extracted, "id", "left_anti"
+                trimmed, "id", "left_anti"
             ).localCheckpoint(eager=True)
             active_edges = (
                 active_edges.join(
                     active_nodes.select(F.col("id").alias("src")), "src", "left_semi"
                 )
-                .join(active_nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
+                .join(
+                    active_nodes.select(F.col("id").alias("dst")), "dst", "left_semi"
+                )
                 .localCheckpoint(eager=True)
             )
-            n_active -= n_extracted
+            n_active -= n_trimmed
+        if n_active == 0:
+            break
+        # --- 2. forward min-color to fixpoint -----------------------
+        colors = active_nodes.select("id", F.col("id").alias("color"))
+        colored = _fixpoint_min_color(spark, active_edges, colors, max_prop_iters)
+        # --- 3. backward reach-root within color class --------------
+        marked = _fixpoint_reach_root(active_edges, colored, max_prop_iters)
+        extracted = (
+            marked.filter("reached")
+            .select("id", F.col("color").alias("component"))
+            .localCheckpoint(eager=True)
+        )
+        n_extracted = extracted.count()
+        resolved.append(extracted)
+        marked.unpersist()
+        # --- 4. shrink active subgraph ------------------------------
+        active_nodes = active_nodes.join(
+            extracted, "id", "left_anti"
+        ).localCheckpoint(eager=True)
+        active_edges = (
+            active_edges.join(
+                active_nodes.select(F.col("id").alias("src")), "src", "left_semi"
+            )
+            .join(active_nodes.select(F.col("id").alias("dst")), "dst", "left_semi")
+            .localCheckpoint(eager=True)
+        )
+        n_active -= n_extracted
 
     if n_active > 0:
         raise RuntimeError(
@@ -445,34 +444,33 @@ def neighborhood_function(
     history: list[tuple[int, int]] = [(0, n_nodes)]  # N(0) = the nodes themselves
     prev_total = n_nodes
 
-    with loop_tuning(spark, n_nodes):
-        for t in range(1, max_distance + 1):
-            succ = (
-                e.join(state, e.dst == state.id)
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.hll_union_agg("sk").alias("succ_sk"))
+    for t in range(1, max_distance + 1):
+        succ = (
+            e.join(state, e.dst == state.id)
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.hll_union_agg("sk").alias("succ_sk"))
+        )
+        new_state = (
+            state.join(succ, "id", "left")
+            .select(
+                "id",
+                F.coalesce(
+                    F.hll_union("sk", "succ_sk"), F.col("sk")
+                ).alias("sk"),
             )
-            new_state = (
-                state.join(succ, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(
-                        F.hll_union("sk", "succ_sk"), F.col("sk")
-                    ).alias("sk"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            total = int(
-                new_state.agg(
-                    F.sum(F.hll_sketch_estimate("sk")).alias("n")
-                ).first()["n"]
-            )
-            state.unpersist()
-            state = new_state
-            history.append((t, total))
-            if total == prev_total:
-                break
-            prev_total = total
+            .localCheckpoint(eager=True)
+        )
+        total = int(
+            new_state.agg(
+                F.sum(F.hll_sketch_estimate("sk")).alias("n")
+            ).first()["n"]
+        )
+        state.unpersist()
+        state = new_state
+        history.append((t, total))
+        if total == prev_total:
+            break
+        prev_total = total
 
     final_total = history[-1][1]
     threshold = quantile * final_total
@@ -540,7 +538,7 @@ def condensation_levels(
         .repartition("u")
         .cache()
     )
-    n_cedges = cedges.count()
+    cedges.count()
 
     init = (
         comp.select(F.col("component").alias("id"))
@@ -573,19 +571,18 @@ def condensation_levels(
         return float(frontier_rows), {"frontier_rows": frontier_rows}
 
     runner = PregelRunner(spark, max_iterations=max_iterations, tol=0.5)
-    with loop_tuning(spark, n_cedges):
-        res = runner.run(init, step, delta)
-        if not res.converged:
-            raise RuntimeError(
-                "condensation did not stabilize within max_iterations — "
-                "the supplied scc_result does not contract all cycles"
-            )
-        levels = res.state.select(F.col("id").alias("component"), "lvl")
-        sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_nodes"))
-        out = levels.join(sizes, "component").select(
-            "component", F.col("lvl").alias("level"), "n_nodes"
+    res = runner.run(init, step, delta)
+    if not res.converged:
+        raise RuntimeError(
+            "condensation did not stabilize within max_iterations — "
+            "the supplied scc_result does not contract all cycles"
         )
-        out = out.localCheckpoint(eager=True)
+    levels = res.state.select(F.col("id").alias("component"), "lvl")
+    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_nodes"))
+    out = levels.join(sizes, "component").select(
+        "component", F.col("lvl").alias("level"), "n_nodes"
+    )
+    out = out.localCheckpoint(eager=True)
     cedges.unpersist()
     comp.unpersist()
     return out

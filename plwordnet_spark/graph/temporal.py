@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from plwordnet_spark.graph.bfs import _source_ids
-from plwordnet_spark.graph.pregel import PregelResult, PregelRunner, loop_tuning
+from plwordnet_spark.graph.pregel import PregelResult, PregelRunner
 
 __all__ = ["temporal_reachability"]
 
@@ -82,7 +82,7 @@ def temporal_reachability(
         .repartition("u")
         .cache()
     )
-    n_rel = rel.count()
+    rel.count()
 
     node_ids = (
         rel.select(F.col("u").alias("id"))
@@ -136,9 +136,8 @@ def temporal_reachability(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    with loop_tuning(spark, n_rel):
-        res = runner.run(init, step, delta)
-        state = res.state.select("id", F.col("arr").alias("arrival"))
+    res = runner.run(init, step, delta)
+    state = res.state.select("id", F.col("arr").alias("arrival"))
     rel.unpersist()
     return PregelResult(
         state=state,

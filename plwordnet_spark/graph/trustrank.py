@@ -74,7 +74,7 @@ def trustrank(
     Exactly ``pagerank(personalization=uniform(seeds))``: teleport and
     dangling mass both return to the seed set, so trust decays with
     link distance from the whitelist. All other pagerank knobs
-    (checkpoint/resume, warm start, loop tuning) pass through."""
+    (checkpoint/resume, warm start) pass through."""
     return pagerank(
         spark,
         edges,

@@ -38,8 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import loop_tuning
-
 __all__ = ["wl_labels", "WL_P", "WL_A", "WL_B", "WL_C"]
 
 WL_P = 2_147_483_647  # 2^31 - 1 (prime): labels stay < 2^31
@@ -73,7 +71,7 @@ def wl_labels(
         .dropDuplicates(["u", "v"])
         .cache()
     )
-    n_rel = rel.count()
+    rel.count()
 
     labels = (
         rel.select(F.col("u").alias("id"))
@@ -82,39 +80,38 @@ def wl_labels(
         .select("id", F.lit(1).cast("long").alias("label"))
     ).localCheckpoint(eager=True)
 
-    with loop_tuning(spark, n_rel):
-        for _ in range(iterations):
-            contrib = (
-                rel.join(
-                    labels.select(
-                        F.col("id").alias("v"), F.col("label").alias("nl")
-                    ),
-                    "v",
-                )
-                .groupBy(F.col("u").alias("id"))
-                .agg(
-                    (
-                        F.sum(
-                            (F.lit(WL_B) * F.col("nl") + F.lit(WL_C))
-                            % F.lit(WL_P)
-                        )
-                        % F.lit(WL_P)
-                    ).alias("t")
-                )
+    for _ in range(iterations):
+        contrib = (
+            rel.join(
+                labels.select(
+                    F.col("id").alias("v"), F.col("label").alias("nl")
+                ),
+                "v",
             )
-            labels = (
-                labels.join(contrib, "id", "left")
-                .select(
-                    "id",
-                    (
-                        (
-                            F.lit(WL_A) * F.col("label")
-                            + F.coalesce(F.col("t"), F.lit(0))
-                        )
+            .groupBy(F.col("u").alias("id"))
+            .agg(
+                (
+                    F.sum(
+                        (F.lit(WL_B) * F.col("nl") + F.lit(WL_C))
                         % F.lit(WL_P)
-                    ).alias("label"),
-                )
-                .localCheckpoint(eager=True)
+                    )
+                    % F.lit(WL_P)
+                ).alias("t")
             )
+        )
+        labels = (
+            labels.join(contrib, "id", "left")
+            .select(
+                "id",
+                (
+                    (
+                        F.lit(WL_A) * F.col("label")
+                        + F.coalesce(F.col("t"), F.lit(0))
+                    )
+                    % F.lit(WL_P)
+                ).alias("label"),
+            )
+            .localCheckpoint(eager=True)
+        )
     rel.unpersist()
     return labels

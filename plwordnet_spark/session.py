@@ -8,6 +8,9 @@ logical plans behave well on a multi-executor cluster:
   (BASELINE.json input_hint: "no per-row Python"),
 * shuffle partitions sized to the parallelism level instead of the 200
   default,
+* one config for everything: graph loops run under these settings and
+  never write the session conf, so a streaming query or a second loop
+  sharing the session sees the same config the whole time,
 * master and driver memory derived from the host the session starts on
   (its usable CPUs, half its physical memory), overridable via
   ``$SPARK_GRAFT_CPUS`` / ``$SPARK_GRAFT_DRIVER_MEM``.

@@ -265,6 +265,21 @@ def test_bucketed_edges_aggregate_no_exchange(spark):
         spark.sql(f"DROP TABLE IF EXISTS {dst_table}")
 
 
+def _stage_page_files(pages, src_dir) -> None:
+    """Write the 150 generated pages as three separate parquet dirs, so
+    a ``maxFilesPerTrigger=1`` stream over them runs three micro-batches."""
+    src_dir.mkdir()
+    for i, frac in enumerate([(0, 50), (50, 100), (100, 150)]):
+        (
+            pages.filter(
+                f"cast(split_part(url, '/p/', 2) as long) >= {frac[0]} and "
+                f"cast(split_part(url, '/p/', 2) as long) < {frac[1]}"
+            )
+            .coalesce(1)
+            .write.parquet(str(src_dir / f"batch{i}"))
+        )
+
+
 def test_streaming_ingest_equals_batch_build(spark, tmp_path):
     """Page stream → incremental edge merges == one-shot batch build
     (streaming crawl ingestion end-to-end; micro-batches forced by
@@ -279,17 +294,7 @@ def test_streaming_ingest_equals_batch_build(spark, tmp_path):
 
     pages = generate_pages(spark, 150, 42).cache()
     src_dir = tmp_path / "pages_in"
-    src_dir.mkdir()
-    # three separate files → three micro-batches
-    for i, frac in enumerate([(0, 50), (50, 100), (100, 150)]):
-        (
-            pages.filter(
-                f"cast(split_part(url, '/p/', 2) as long) >= {frac[0]} and "
-                f"cast(split_part(url, '/p/', 2) as long) < {frac[1]}"
-            )
-            .coalesce(1)
-            .write.parquet(str(src_dir / f"batch{i}"))
-        )
+    _stage_page_files(pages, src_dir)
     stream = read_page_stream(spark, str(src_dir) + "/*", max_files_per_trigger=1)
     edges_dir = str(tmp_path / "edges_snap")
     query = stream_pages_to_edges(
@@ -311,4 +316,109 @@ def test_streaming_ingest_equals_batch_build(spark, tmp_path):
         for r in batch.select("src", "dst", "rel_id", "weight").collect()
     }
     assert got == want
+    pages.unpersist()
+
+
+def test_stream_and_pagerank_share_session(spark, tmp_path, monkeypatch):
+    """A streaming ingest and a PageRank loop running at once in ONE
+    session: both results stay exact, and the session's AQE and shuffle
+    width read the same before, inside the stream's micro-batches while
+    the loop is underway, and after — no loop writes the shared conf."""
+    import threading
+    import time
+
+    import networkx as nx
+    from networkx.algorithms.link_analysis.pagerank_alg import _pagerank_python
+    from pyspark import InheritableThread
+
+    from plwordnet_spark.corpus import generate_pages
+    from plwordnet_spark.graph.build import build_graph
+    from plwordnet_spark.graph.pagerank import pagerank
+    from plwordnet_spark.streaming.ingest import (
+        EdgeLog,
+        read_page_stream,
+        stream_pages_to_edges,
+    )
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+    def conf() -> tuple:
+        return tuple(spark.conf.get(k) for k in keys)
+
+    pages = generate_pages(spark, 150, 42).cache()
+    edges = build_graph(pages).edges.select("src", "dst", "rel_id", "weight").cache()
+    want = {(r.src, r.dst, r.rel_id): r.weight for r in edges.collect()}
+    src_dir = tmp_path / "pages_in"
+    _stage_page_files(pages, src_dir)
+    before = conf()
+
+    group = "pagerank-beside-stream"
+    tracker = spark.sparkContext.statusTracker()
+    loop_done = threading.Event()
+    outcome: dict = {}
+
+    def run_pagerank() -> None:
+        spark.sparkContext.setJobGroup(group, "pagerank beside a stream")
+        try:
+            outcome["result"] = pagerank(spark, edges, tol=1e-8, max_iterations=200)
+        except BaseException as exc:  # surfaced by the main thread
+            outcome["error"] = exc
+        finally:
+            loop_done.set()
+
+    # every micro-batch samples the shared conf; it first waits until the
+    # loop is past its setup jobs, so the first sample lands mid-loop
+    samples: list[tuple[tuple, bool]] = []
+    merge = EdgeLog.merge_batch
+
+    def sampling_merge(self, batch_pages, batch_id):
+        deadline = time.time() + 120
+        while (
+            not loop_done.is_set()
+            and len(tracker.getJobIdsForGroup(group)) < 10
+            and time.time() < deadline
+        ):
+            time.sleep(0.05)
+        sample = conf()
+        samples.append((sample, not loop_done.is_set()))
+        return merge(self, batch_pages, batch_id)
+
+    monkeypatch.setattr(EdgeLog, "merge_batch", sampling_merge)
+
+    stream = read_page_stream(spark, str(src_dir) + "/*", max_files_per_trigger=1)
+    edges_dir = str(tmp_path / "edges_snap")
+    query = stream_pages_to_edges(
+        spark, stream, edges_dir, str(tmp_path / "ingest_ckpt")
+    )
+    ranker = InheritableThread(target=run_pagerank)
+    ranker.start()
+    query.awaitTermination(180)
+    ranker.join(180)
+    after = conf()
+
+    assert query.exception() is None
+    assert "error" not in outcome, outcome.get("error")
+    final, _ = EdgeLog(spark, edges_dir).latest()
+    assert {(r.src, r.dst, r.rel_id): r.weight for r in final.collect()} == want
+
+    result = outcome["result"]
+    assert result.converged
+    got = {r.id: r.rank for r in result.state.collect()}
+    g = nx.DiGraph()
+    for (src, dst, _rel), w in want.items():
+        prev = g.get_edge_data(src, dst, {"weight": 0.0})["weight"]
+        g.add_edge(src, dst, weight=prev + w)
+    # networkx's pure-Python power iteration (its public entry needs scipy)
+    expected = _pagerank_python(g, alpha=0.85, tol=1e-8, max_iter=200)
+    assert set(got) == set(expected)
+    ids = sorted(expected)
+    assert np.allclose(
+        [got[i] for i in ids], [expected[i] for i in ids], rtol=0, atol=1e-6
+    )
+
+    assert len(samples) >= 2  # incremental merges happened
+    assert any(during for _, during in samples), "no batch ran during the loop"
+    assert all(sample == before for sample, _ in samples), (before, samples)
+    assert after == before
+    edges.unpersist()
     pages.unpersist()

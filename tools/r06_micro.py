@@ -76,7 +76,7 @@ def main() -> None:
 
         big = need_big()
         return pagerank(spark, big, tol=0.0, max_iterations=10,
-                        auto_tune=False, check_interval=5)
+                        check_interval=5)
 
     def op_bfs_big():
         from plwordnet_spark.graph.bfs import bfs_distances

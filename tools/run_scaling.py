@@ -87,9 +87,9 @@ def cmd_run(args) -> None:
         n_edges, n_nodes = BASE_EDGES * scale, BASE_NODES * scale
         edges = _make_edges(spark, n_edges, n_nodes).repartition(cpus, "src").cache()
         ne = edges.count()
-        pagerank(spark, edges, tol=0.0, max_iterations=2, auto_tune=False, check_interval=5)
+        pagerank(spark, edges, tol=0.0, max_iterations=2, check_interval=5)
         start = time.time()
-        pagerank(spark, edges, tol=0.0, max_iterations=ITERS, auto_tune=False, check_interval=5)
+        pagerank(spark, edges, tol=0.0, max_iterations=ITERS, check_interval=5)
         sec = time.time() - start
         result.update(
             n_edges=ne,
