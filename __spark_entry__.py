@@ -1418,7 +1418,7 @@ def _q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from plwordnet_spark.graph.components import connected_components
 
     edges = _derived_edges(spark, sf_dir)
-    res = connected_components(spark, edges, method="two-phase")
+    res = connected_components(spark, edges)
     return res.state.select("id", "component")
 
 

@@ -445,7 +445,6 @@ def main() -> None:
                     "pagerank_skew_unsalted",
                     lambda: pagerank(
                         spark, skewed, tol=0.0, max_iterations=skew_iters,
-                        check_interval=5,
                     ),
                 ),
             ],
@@ -477,7 +476,7 @@ def main() -> None:
         n_ss_nodes = max(srcskew_target // 10, 1)
         # _make_edges with ~10% of the RANDOM edges re-sourced to hub
         # src 0; the ring stays intact so every node keeps out-degree
-        # >= 1 (dangling-free, so check_interval=5 stays legal)
+        # >= 1 (dangling-free)
         srcskew = (
             _make_edges(spark, srcskew_target, n_ss_nodes, hub_src_pct=10)
             .repartition(CPUS, "src")
@@ -491,7 +490,6 @@ def main() -> None:
                     "pagerank_srcskew_plain",
                     lambda: pagerank(
                         spark, srcskew, tol=0.0, max_iterations=ss_iters,
-                        check_interval=5,
                     ),
                 ),
             ],
@@ -534,7 +532,6 @@ def main() -> None:
         def _pr_big():
             return pagerank(
                 spark, big, tol=0.0, max_iterations=big_iters,
-                check_interval=5,
             )
 
         # frontier-based BFS on the same graph: per-round cost must track

@@ -101,7 +101,7 @@ def cmd_components(args) -> int:
     from plwordnet_spark.graph.components import connected_components
 
     nodes, edges = _load_graph(spark, args.graph)
-    res = connected_components(spark, edges, nodes=nodes, method=args.method)
+    res = connected_components(spark, edges, nodes=nodes)
     if args.output:
         res.state.write.mode("overwrite").parquet(args.output)
     n_comp = res.state.select("component").distinct().count()
@@ -499,9 +499,6 @@ def main(argv: list[str] | None = None) -> int:
         if name == "hits":
             p.add_argument("--tol", type=float, default=1e-8)
             p.add_argument("--max-iterations", type=int, default=50)
-        if name == "components":
-            p.add_argument("--method", default="two-phase",
-                           choices=["two-phase", "hashmin"])
         if name == "labelprop":
             p.add_argument("--max-iterations", type=int, default=10)
         p.set_defaults(fn=fn)

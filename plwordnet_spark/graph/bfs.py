@@ -1,8 +1,8 @@
 """Shortest-path distances: unweighted BFS and weighted SSSP.
 
-Both are min-plus distance flooding on the Pregel runner — the hash-min
-pattern of ``graph.components._hashmin`` carrying ``min(dist + w)``
-instead of ``min(id)``: per round one join (FRONTIER dists onto edges) +
+Both are min-plus distance flooding on the Pregel runner — hash-min
+label flooding carrying ``min(dist + w)`` instead of ``min(id)``: per
+round one join (FRONTIER dists onto edges) +
 one groupBy(min) gather, both with map-side partial aggregation, state
 is one (id, dist, changed) row per node. Only rows whose dist improved
 last round enter the relax join (delta relaxation), so total work is
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
+from plwordnet_spark.graph.pregel import PregelResult, PregelRunner, frontier_scalars
 from plwordnet_spark.storage.snapshots import SnapshotStore
 
 __all__ = [
@@ -129,15 +129,14 @@ def _min_plus_loop(
     exactly a NULL-dist row). The dense (id, dist) contract — one row
     per node, NULL = unreachable — is assembled ONCE after the loop.
 
-    Convergence = empty frontier; the delta action is a filter-count on
-    the new state (no old⋈new join needed — cheaper than the old
-    comparison) and reports ``frontier_rows`` (rows entering the NEXT
-    round's relax join) into the runner metrics.
+    Convergence = empty frontier: the count of ``changed`` rows (rows
+    entering the NEXT round's relax join) is observed on the round's
+    checkpoint and reported as ``frontier_rows`` in the runner metrics.
     """
 
     def step(state: DataFrame) -> DataFrame:
-        # state is re-materialized every iteration (truncate_interval=1),
-        # so the double reference below (frontier + outer join) reads the
+        # the runner materializes the state every iteration, so the
+        # double reference below (frontier + outer join) reads the
         # checkpointed scan twice — no plan blowup.
         frontier = state.filter(F.col("changed")).select(
             F.col("id").alias("u"), "dist"
@@ -162,10 +161,6 @@ def _min_plus_loop(
             ).alias("changed"),
         )
 
-    def delta(old: DataFrame, new: DataFrame):
-        frontier_rows = new.filter(F.col("changed")).count()
-        return float(frontier_rows), {"frontier_rows": frontier_rows}
-
     runner = PregelRunner(
         spark,
         max_iterations=max_iterations,
@@ -173,9 +168,7 @@ def _min_plus_loop(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    res = runner.run(
-        init.withColumn("changed", F.lit(True)), step, delta
-    )
+    res = runner.run(init.withColumn("changed", F.lit(True)), step, *frontier_scalars())
     # dense contract fill: one row per node, NULL dist = unreachable
     state = ids.join(
         res.state.select("id", "dist").hint("shuffle_hash"), "id", "left"
@@ -293,15 +286,11 @@ def landmark_distances(
             improved.alias("changed"),
         )
 
-    def delta(old: DataFrame, new: DataFrame):
-        frontier_rows = new.filter(F.col("changed")).count()
-        return float(frontier_rows), {"frontier_rows": frontier_rows}
-
     runner = PregelRunner(
         spark, max_iterations=max_iterations, tol=0.5,
         checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
     )
-    res = runner.run(init, step, delta)
+    res = runner.run(init, step, *frontier_scalars())
     state = res.state.select("id", F.col("lm").alias("landmark"), "dist")
     rel.unpersist()
     return PregelResult(

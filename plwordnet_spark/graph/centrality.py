@@ -185,19 +185,16 @@ def eigenvector_centrality(
             "id", F.coalesce("raw", F.lit(0.0)).alias("raw")
         )
         norm = filled.agg(F.sqrt(F.sum(F.col("raw") ** 2)).alias("_n"))
-        return filled.crossJoin(F.broadcast(norm)).select(
-            "id",
-            F.when(F.col("_n") > 0, F.col("raw") / F.col("_n"))
-            .otherwise(F.lit(0.0))
-            .alias("score"),
-        )
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
+        # the previous score rides along as s0 for the L1 scalar
         return (
-            new.alias("n")
-            .join(old.alias("o"), "id")
-            .agg(F.sum(F.abs(F.col("n.score") - F.col("o.score"))).alias("d"))
-            .collect()[0]["d"]
+            filled.crossJoin(F.broadcast(norm))
+            .select(
+                "id",
+                F.when(F.col("_n") > 0, F.col("raw") / F.col("_n"))
+                .otherwise(F.lit(0.0))
+                .alias("score"),
+            )
+            .join(state.withColumnRenamed("score", "s0"), "id", "left")
         )
 
     runner = PregelRunner(
@@ -207,7 +204,10 @@ def eigenvector_centrality(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    result = runner.run(init, step, delta if tol else None)
+    result = runner.run(
+        init, step, [F.sum(F.abs(F.col("score") - F.col("s0"))).alias("l1")],
+        lambda o: o["l1"],
+    )
     ids.unpersist()
     links.unpersist()
     return PregelResult(

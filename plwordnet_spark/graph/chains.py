@@ -94,16 +94,8 @@ def resolve_chains(
             (
                 F.col("x.hops") + F.coalesce(F.col("y.hops"), F.lit(0).cast("long"))
             ).alias("hops"),
+            (F.coalesce(F.col("y.ptr"), F.col("x.ptr")) != F.col("x.ptr")).alias("moved"),
         )
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        moved = (
-            new.alias("n")
-            .join(old.alias("o"), "src")
-            .filter(F.col("n.ptr") != F.col("o.ptr"))
-            .count()
-        )
-        return float(moved)
 
     runner = PregelRunner(
         spark,
@@ -112,7 +104,9 @@ def resolve_chains(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    result = runner.run(init, step, delta)
+    result = runner.run(
+        init, step, [F.count_if("moved").alias("moved")], lambda o: float(o["moved"])
+    )
 
     srcs = edges.select("src").distinct()
     resolved = (

@@ -1,4 +1,4 @@
-"""Connected components: large-star/small-star (default) and hash-min.
+"""Connected components: alternating large-star/small-star.
 
 The alternating large-star/small-star algorithm (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14 — public
@@ -19,8 +19,9 @@ Both are ``groupBy(min) + join`` — partial aggregation absorbs hub skew
 on the min side; the join fan-out is bounded by node degree.
 
 Fixpoint detection compares a cheap order-insensitive fingerprint
-(count + sum of per-edge hashes) between rounds — one scalar action,
-no edge-set materialization on the driver.
+(count + sum of per-edge hashes) between rounds — observed on the
+round's checkpoint, so each round is one action and the edge set never
+reaches the driver.
 """
 
 from __future__ import annotations
@@ -28,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
+from plwordnet_spark.graph.pregel import (
+    PregelResult,
+    PregelRunner,
+    fingerprint,
+    unchanged_fingerprint,
+)
 
 __all__ = ["connected_components", "incremental_components"]
 
@@ -69,33 +75,16 @@ def _small_star(e: DataFrame) -> DataFrame:
     return linked.unionByName(self_link).filter("u != v").distinct()
 
 
-def _fingerprint(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(
-        F.count(F.lit(1)).alias("c"),
-        # decimal accumulator: a long sum of 2^63-range hashes overflows
-        # under ANSI mode
-        F.coalesce(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return int(row["c"]), int(row["h"])
-
-
 def connected_components(
     spark: SparkSession,
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    method: str = "two-phase",
     max_iterations: int = 50,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 3,
 ) -> PregelResult:
     """edges(src, dst, …) → assignments(id, component) where component is
     the minimum node id of the component (deterministic canonical label).
-
-    ``method``: "two-phase" (large-star/small-star) or "hashmin"
-    (min-label flooding, O(diameter) rounds — simpler, kept as the
-    cross-check implementation and property-test foil).
     """
     ids = (
         (nodes.select("id") if nodes is not None else
@@ -111,35 +100,6 @@ def connected_components(
     # 32-partition/no-AQE rounds 2× slower and a narrow fixed width no
     # better than AQE.
 
-    if method == "hashmin":
-        result = _hashmin(spark, und, ids, max_iterations, checkpoint_dir, checkpoint_interval)
-    elif method == "two-phase":
-        result = _two_phase(spark, und, ids, max_iterations, checkpoint_dir, checkpoint_interval)
-    else:
-        raise ValueError(f"unknown method: {method}")
-    ids.unpersist()
-    return result
-
-
-def _two_phase(
-    spark: SparkSession,
-    und: DataFrame,
-    ids: DataFrame,
-    max_iterations: int,
-    checkpoint_dir: str | None,
-    checkpoint_interval: int,
-) -> PregelResult:
-    last_fp = {"fp": None}
-
-    def step(e: DataFrame) -> DataFrame:
-        return _small_star(_large_star(e))
-
-    def delta(_old: DataFrame, new: DataFrame) -> float:
-        fp = _fingerprint(new)
-        changed = 0.0 if fp == last_fp["fp"] else 1.0
-        last_fp["fp"] = fp
-        return changed
-
     runner = PregelRunner(
         spark,
         max_iterations=max_iterations,
@@ -147,7 +107,12 @@ def _two_phase(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    res = runner.run(und.select("u", "v"), step, delta)
+    res = runner.run(
+        und.select("u", "v"),
+        lambda e: _small_star(_large_star(e)),
+        fingerprint("u", "v"),
+        unchanged_fingerprint(),
+    )
     star = res.state  # (u → v=root) star edges at fixpoint
     assign = (
         star.select(F.col("u").alias("id"), F.col("v").alias("component"))
@@ -159,61 +124,16 @@ def _two_phase(
         ids.join(assign, "id", "left")
         .select("id", F.coalesce("component", "id").alias("component"))
     )
+    ids.unpersist()
     return PregelResult(
         state=full, iterations=res.iterations, converged=res.converged, metrics=res.metrics
     )
-
-
-def _hashmin(
-    spark: SparkSession,
-    und: DataFrame,
-    ids: DataFrame,
-    max_iterations: int,
-    checkpoint_dir: str | None,
-    checkpoint_interval: int,
-) -> PregelResult:
-    sym = und.repartition("v").cache()
-    sym.count()
-    init = ids.select("id", F.col("id").alias("component"))
-
-    def step(comp: DataFrame) -> DataFrame:
-        # node-sized sides hash-joined (no per-round sort of the cached
-        # edge table / label state — same rationale as the star steps)
-        nbr_min = (
-            sym.join(comp.withColumnRenamed("id", "v").hint("shuffle_hash"), "v")
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.min("component").alias("nbr"))
-        )
-        return comp.join(nbr_min.hint("shuffle_hash"), "id", "left").select(
-            "id", F.least(F.col("component"), F.coalesce("nbr", "component")).alias("component")
-        )
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        changed = (
-            old.withColumnRenamed("component", "c0")
-            .join(new, "id")
-            .filter(F.col("c0") != F.col("component"))
-            .count()
-        )
-        return float(changed)
-
-    runner = PregelRunner(
-        spark,
-        max_iterations=max_iterations,
-        tol=0.5,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_interval=checkpoint_interval,
-    )
-    res = runner.run(init, step, delta)
-    sym.unpersist()
-    return res
 
 
 def incremental_components(
     spark: SparkSession,
     prev_labels: DataFrame,
     new_edges: DataFrame,
-    method: str = "two-phase",
     max_iterations: int = 50,
 ) -> PregelResult:
     """Maintain connected components under EDGE ARRIVALS without
@@ -248,5 +168,5 @@ def incremental_components(
         .distinct()
     )
     return connected_components(
-        spark, union, nodes=nodes, method=method, max_iterations=max_iterations
+        spark, union, nodes=nodes, max_iterations=max_iterations
     )

@@ -32,17 +32,14 @@ def hits(
     tol: float = 1e-8,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
-    check_interval: int = 1,
 ) -> PregelResult:
     """edges(src, dst, …) → (id, hub, authority), both L2-normalized.
 
     ``tol``: converged when the L1 change of the hub vector drops below
     ``n_nodes · tol``; pass ``tol=0.0`` to run exactly max_iterations
-    (fixed-k mode — what the driver's SQL oracle replays). Fixed-k mode
-    skips the per-iteration delta action entirely (no convergence to
-    detect); ``check_interval`` thins it out for tol>0 runs, like
-    pagerank's — HITS norms shrink deltas monotonically enough that
-    overshooting by check_interval−1 rounds is benign."""
+    (fixed-k mode — what the driver's SQL oracle replays). The L1 change
+    is observed on each round's checkpoint in either mode, so every
+    round is one Spark action and lands its ``delta`` in the metrics."""
     ids = (
         (nodes.select("id") if nodes is not None else
          edges.select(F.col("src").alias("id"))
@@ -84,6 +81,11 @@ def hits(
     # half-round drops its node-universe fill join, removing two
     # node-sized exchanges per iteration. The dense (id, hub, authority)
     # vector is assembled ONCE after the loop.
+    #
+    # The L1 change must still see nodes that LEFT the support (their
+    # previous hub counts against an exact 0.0): each step full-outer
+    # joins the previous hub, and a node that left stays one round as a
+    # tombstone row (hub NULL) that the next step drops before gathering.
     init = ids.select("id", F.lit(1.0 / n_nodes).alias("hub"))
 
     # Each half-round's raw gather is persist()ed so the broadcast-norm
@@ -105,6 +107,9 @@ def hits(
         for df in pending_caches:
             df.unpersist()
         pending_caches.clear()
+
+    def _live(state: DataFrame) -> DataFrame:
+        return state.filter(F.col("hub").isNotNull())
 
     def _l2_normalized(raw: DataFrame, col: str) -> DataFrame:
         # one-row norm aggregate broadcast back onto the (cached) gather
@@ -136,8 +141,9 @@ def hits(
         )
         return _l2_normalized(raw, "authority")
 
-    def step(hub_state: DataFrame) -> DataFrame:
+    def step(state: DataFrame) -> DataFrame:
         _release_caches()  # previous iteration's state is materialized
+        hub_state = _live(state)
         # auth itself is referenced exactly once (hub_raw's join) — only
         # the raw gathers need caching; persisting auth would store a
         # full node vector per iteration for zero reuse
@@ -152,24 +158,13 @@ def hits(
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("authority").alias("hub"))
         )
-        return _l2_normalized(hub_raw, "hub")
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        # full outer + coalesce: sparse states still yield the DENSE
-        # vectors' L1 difference (missing row ≡ exact 0.0)
-        return float(
-            old.select("id", F.col("hub").alias("h0"))
-            .join(new.select("id", "hub"), "id", "full")
-            .agg(
-                F.sum(
-                    F.abs(
-                        F.coalesce(F.col("hub"), F.lit(0.0))
-                        - F.coalesce(F.col("h0"), F.lit(0.0))
-                    )
-                )
-            )
-            .first()[0]
+        return _l2_normalized(hub_raw, "hub").join(
+            hub_state.select("id", F.col("hub").alias("h0")), "id", "full"
         )
+
+    # full outer + coalesce: sparse states still yield the DENSE vectors'
+    # L1 difference (missing row ≡ exact 0.0)
+    l1 = F.abs(F.coalesce(F.col("hub"), F.lit(0.0)) - F.coalesce(F.col("h0"), F.lit(0.0)))
 
     runner = PregelRunner(
         spark,
@@ -177,18 +172,15 @@ def hits(
         tol=n_nodes * tol,
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
-        check_interval=check_interval,
     )
-    # fixed-k mode (tol<=0 can never satisfy delta<tol): drop the
-    # delta callable so no convergence action runs at all — each
-    # iteration is exactly one materializing job
-    res = runner.run(init, step, delta if tol > 0 else None)
+    res = runner.run(init, step, [F.sum(l1).alias("l1")], lambda o: o["l1"])
     _release_caches()
     # ONE dense fill over the node universe, after the loop: sparse
     # hub/authority rows land on ids, absences are exact 0.0s
+    hub_state = _live(res.state)
     state = (
-        ids.join(res.state, "id", "left")
-        .join(_auth_of(res.state), "id", "left")
+        ids.join(hub_state, "id", "left")
+        .join(_auth_of(hub_state), "id", "left")
         .select(
             "id",
             F.coalesce("hub", F.lit(0.0)).alias("hub"),

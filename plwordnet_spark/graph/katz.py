@@ -85,20 +85,18 @@ def katz_centrality(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("katz").alias("incoming"))
         )
-        return ids.join(gathered, "id", "left").select(
-            "id",
-            (
-                F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
-                + F.lit(beta)
-            ).alias("katz"),
-        )
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
+        # the previous score rides along as k0 for the L1 scalar
         return (
-            new.alias("n")
-            .join(old.alias("o"), "id")
-            .agg(F.sum(F.abs(F.col("n.katz") - F.col("o.katz"))).alias("d"))
-            .collect()[0]["d"]
+            ids.join(gathered, "id", "left")
+            .join(state.withColumnRenamed("katz", "k0"), "id", "left")
+            .select(
+                "id",
+                (
+                    F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
+                    + F.lit(beta)
+                ).alias("katz"),
+                "k0",
+            )
         )
 
     runner = PregelRunner(
@@ -108,7 +106,10 @@ def katz_centrality(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    result = runner.run(init, step, delta if tol else None)
+    result = runner.run(
+        init, step, [F.sum(F.abs(F.col("katz") - F.col("k0"))).alias("l1")],
+        lambda o: o["l1"],
+    )
 
     out = result.state
     if normalize:

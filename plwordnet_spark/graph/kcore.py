@@ -6,7 +6,8 @@ frontier pruning). Peeling: repeatedly drop nodes with degree < k and
 the edges touching them, to fixpoint. Each round is one degree
 aggregation + two semi-joins over the shrinking edge state — the same
 edge-state Pregel shape as large-star/small-star; convergence is the
-CC-style order-insensitive edge fingerprint (one scalar action/round).
+CC-style order-insensitive edge fingerprint, observed on each round's
+checkpoint (one action per round).
 
 Peeling is a deterministic single-valued iteration, so running the same
 round count on the engine and an unrolled SQL oracle yields identical
@@ -21,19 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner, PregelResult
+from plwordnet_spark.graph.pregel import (
+    PregelResult,
+    PregelRunner,
+    fingerprint,
+    unchanged_fingerprint,
+)
 
 __all__ = ["k_core"]
-
-
-def _fingerprint(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(
-        F.count(F.lit(1)).alias("c"),
-        F.coalesce(
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return int(row["c"]), int(row["h"])
 
 
 def k_core(
@@ -57,7 +53,7 @@ def k_core(
     # seed with the INITIAL state's fingerprint: a graph that already is
     # its own k-core converges in one round (and max_iterations=1 on a
     # fixpoint input reports converged=True)
-    last_fp = {"fp": _fingerprint(und)}
+    seed = und.agg(*fingerprint("a", "b")).first()
 
     def step(e: DataFrame) -> DataFrame:
         deg = (
@@ -84,12 +80,6 @@ def k_core(
             .select("a", "b")
         )
 
-    def delta(_old: DataFrame, new: DataFrame) -> float:
-        fp = _fingerprint(new)
-        changed = 0.0 if fp == last_fp["fp"] else 1.0
-        last_fp["fp"] = fp
-        return changed
-
     runner = PregelRunner(
         spark,
         max_iterations=max_iterations,
@@ -97,7 +87,7 @@ def k_core(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    res = runner.run(und, step, delta)
+    res = runner.run(und, step, fingerprint("a", "b"), unchanged_fingerprint(tuple(seed)))
     core_nodes = (
         res.state.select(F.col("a").alias("id"))
         .unionByName(res.state.select(F.col("b").alias("id")))

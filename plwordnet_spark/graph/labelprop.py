@@ -66,19 +66,11 @@ def label_propagation(
                 "nbr_label"
             )
         )
-        return (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("nbr_label", "label").alias("label"))
+        return labels.join(best, "id", "left").select(
+            "id",
+            F.coalesce("nbr_label", "label").alias("label"),
+            (F.col("nbr_label") != F.col("label")).alias("changed"),
         )
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        changed = (
-            old.withColumnRenamed("label", "l0")
-            .join(new, "id")
-            .filter(F.col("l0") != F.col("label"))
-            .count()
-        )
-        return float(changed)
 
     runner = PregelRunner(
         spark,
@@ -87,7 +79,9 @@ def label_propagation(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    res = runner.run(init, step, delta if stop_on_stable else None)
+    res = runner.run(
+        init, step, [F.count_if("changed").alias("changed")], lambda o: float(o["changed"])
+    )
     sym.unpersist()
     ids.unpersist()
     return res

@@ -18,9 +18,10 @@ Scale design:
   hub in-degree skew, so this algebraic sum needs no explicit salting
   (BENCH/SKEW.md, north rule),
 * ranks is the only mutable state: ``(id, rank)``, one row per node,
-* driver sees two scalars per iteration (dangling mass, L1 delta) —
-  everything else stays distributed; lineage is truncated by the
-  PregelRunner,
+* the driver sees two scalars per iteration (L1 delta, dangling mass),
+  observed on the checkpoint that materializes the new ranks — the step
+  carries each node's previous rank beside the new one, so no iteration
+  runs a second job; lineage is truncated by the PregelRunner,
 * the loop runs under the session's own config (AQE on, shuffle width
   = core count, as ``get_spark`` sets it) and writes no session conf, so
   a query sharing the session runs unchanged next to it.
@@ -48,7 +49,6 @@ def pagerank(
     checkpoint_interval: int = 5,
     initial_ranks: DataFrame | None = None,
     start_iteration: int = 0,
-    check_interval: int = 1,
     retain_snapshots: int | None = None,
     personalization: DataFrame | None = None,
 ) -> PregelResult:
@@ -70,16 +70,25 @@ def pagerank(
         )
     else:
         ids = nodes.select("id").distinct()
-    ids = ids.repartition("id").cache()
-    n_nodes = ids.count()
+    out_w = edge_w.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("out_w"))
+    # the node universe carries its dangling flag (no out-edges) once, so
+    # each iteration's dangling mass is a conditional sum over new ranks
+    ids = (
+        ids.join(out_w.select("id", F.lit(False).alias("_dangling")), "id", "left")
+        .select("id", F.coalesce("_dangling", F.lit(True)).alias("_dangling"))
+        .repartition("id")
+        .cache()
+    )
+    sizes = ids.agg(F.count(F.lit(1)).alias("n"), F.count_if("_dangling").alias("d")).first()
+    n_nodes, n_dangling = sizes["n"], sizes["d"]
     if n_nodes == 0:
+        ids.unpersist()
         return PregelResult(
             state=spark.createDataFrame([], "id long, rank double"),
             iterations=0,
             converged=True,
         )
 
-    out_w = edge_w.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("out_w"))
     # scatter share precomputed once; partitioned by src for the per-
     # iteration rank join (no re-exchange of the big table per step).
     # shuffle-hash hint: the default sort-merge would sort the FULL edge
@@ -93,24 +102,20 @@ def pagerank(
     )
     scatter.count()  # materialize before the loop
 
-    dangling = ids.join(out_w, "id", "left_anti").withColumn(
-        "_is_dangling", F.lit(True)
-    ).cache()  # no out-edges
-
     # teleport distribution: None = uniform scalar fast path; otherwise
-    # (id, p) normalized to sum 1, cached co-partitioned with ids
+    # (id, _dangling, p) normalized to sum 1, cached co-partitioned with ids
     pvec = None
     if personalization is not None:
         p_raw = ids.join(
             personalization.select("id", F.col("p").cast("double").alias("_p")),
             "id",
             "left",
-        ).select("id", F.coalesce("_p", F.lit(0.0)).alias("_p"))
+        ).select("id", "_dangling", F.coalesce("_p", F.lit(0.0)).alias("_p"))
         p_sum = float(p_raw.agg(F.sum("_p")).first()[0] or 0.0)
         if p_sum <= 0:
             raise ValueError("personalization must have positive total mass")
         pvec = (
-            p_raw.select("id", (F.col("_p") / F.lit(p_sum)).alias("p"))
+            p_raw.select("id", "_dangling", (F.col("_p") / F.lit(p_sum)).alias("p"))
             .repartition("id")
             .cache()
         )
@@ -125,96 +130,63 @@ def pagerank(
     else:
         init = ids.select("id", F.lit(1.0 / n_nodes).alias("rank"))
 
-    # the dangling mass of the CURRENT state is measured in the previous
-    # iteration's delta action (one combined scan instead of a separate
-    # per-iteration job); graphs with no dangling nodes (checked once)
-    # skip the bookkeeping entirely
-    n_dangling = dangling.count()
-    if n_dangling == 0:
-        state_dm = {"dm": 0.0}
-    else:
-        state_dm = {
-            "dm": float(
-                init.join(dangling.select("id"), "id")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                .first()[0]
-            )
-        }
-        if check_interval != 1:
-            raise ValueError(
-                "check_interval > 1 requires a dangling-free graph: the "
-                "dangling mass is refreshed by the delta action"
-            )
-
-    def _assemble(gathered: DataFrame, dm: float) -> DataFrame:
-        """teleport + damped incoming → next rank vector; the uniform
-        path keeps the original scalar float-op order (oracle parity).
-
-        The gathered side carries a shuffle-hash hint: the planner's
-        default here is a SortMergeJoin that re-sorts BOTH the node
-        universe and the gather output every iteration (guide §3.1 —
-        "pick the strategy deliberately"); hashing the gather output
-        (≤ one row per node) against the co-partitioned ids avoids both
-        sorts, and at cluster scale never tempts the planner into
-        broadcasting a node-count-sized vector."""
-        g = gathered.withColumnRenamed("dst", "id").hint("shuffle_hash")
-        if pvec is None:
-            base = (1.0 - alpha) / n_nodes + alpha * dm / n_nodes
-            return ids.join(g, "id", "left").select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        scalar = (1.0 - alpha) + alpha * dm
-        return pvec.join(g, "id", "left").select(
-            "id",
-            (
-                F.col("p") * F.lit(scalar)
-                + F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
-            ).alias("rank"),
+    # dangling mass of the current state: measured once for the start
+    # state, then observed on each iteration's checkpoint (see ``delta``)
+    dm = 0.0
+    if n_dangling:
+        dm = float(
+            init.join(ids.filter("_dangling"), "id")
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+            .first()[0]
         )
 
     def step(ranks: DataFrame) -> DataFrame:
-        # shuffle-hash hint on the rank side (guide §3.1): without it the
-        # planner either broadcasts the rank vector (measured at 24M
-        # edges: a 2.2M-row hashed relation built serially on the driver
-        # EVERY iteration — and a guaranteed driver OOM at 10^9 nodes) or
-        # falls back to sort-merge, re-sorting the cached scatter table
-        # each step. The hinted plan shuffles only the node-count-sized
-        # rank rows into the scatter table's existing partitioning and
-        # builds per-partition hash tables in parallel. Results are
-        # join-strategy-independent (same partials feed the gather sum).
+        """Gather, then teleport + damped incoming → next rank vector
+        beside the previous rank ``r0`` (the scalars' input); the uniform
+        path keeps the original scalar float-op order (oracle parity).
+
+        Shuffle-hash hints (guide §3.1): on the rank side of the scatter
+        join, the planner otherwise either broadcasts the rank vector
+        (measured at 24M edges: a 2.2M-row hashed relation built serially
+        on the driver EVERY iteration — and a guaranteed driver OOM at
+        10^9 nodes) or falls back to sort-merge, re-sorting the cached
+        scatter table each step. On the node-sized gather output and
+        previous ranks, the default SortMergeJoin would re-sort the node
+        universe every iteration. Results are join-strategy-independent
+        (same partials feed the gather sum)."""
         contribs = scatter.join(
             ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
         )
         gathered = contribs.groupBy("dst").agg(
             F.sum(F.col("rank") * F.col("share")).alias("incoming")
         )
-        return _assemble(gathered, state_dm["dm"])
-
-    def l1_delta(old: DataFrame, new: DataFrame) -> float:
-        # one scan: L1 convergence error (+ next iteration's dangling mass
-        # when the graph has dangling nodes)
-        # both sides are checkpointed (no size estimates) — hash-join
-        # instead of the planner's sort-merge fallback
-        joined = old.withColumnRenamed("rank", "r0").join(
-            new.hint("shuffle_hash"), "id"
+        incoming = F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
+        if pvec is None:
+            universe = ids
+            rank = F.lit((1.0 - alpha) / n_nodes + alpha * dm / n_nodes) + incoming
+        else:
+            universe = pvec
+            rank = F.col("p") * F.lit((1.0 - alpha) + alpha * dm) + incoming
+        return (
+            universe.join(gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"), "id", "left")
+            .join(ranks.withColumnRenamed("rank", "r0").hint("shuffle_hash"), "id", "left")
+            .select("id", rank.alias("rank"), "r0", "_dangling")
         )
-        if n_dangling == 0:
-            return float(
-                joined.agg(F.sum(F.abs(F.col("rank") - F.col("r0")))).first()[0]
-            )
-        joined = joined.join(dangling.select("id", "_is_dangling"), "id", "left")
-        row = joined.agg(
-            F.sum(F.abs(F.col("rank") - F.col("r0"))).alias("l1"),
-            F.coalesce(
-                F.sum(F.when(F.col("_is_dangling"), F.col("rank"))), F.lit(0.0)
-            ).alias("dm"),
-        ).first()
-        state_dm["dm"] = float(row["dm"])
-        return float(row["l1"])
+
+    # both scalars sum only rows the previous state held (non-null r0):
+    # the L1 convergence error, and the next step's dangling mass
+    present = F.col("r0").isNotNull()
+    scalars = [
+        F.coalesce(F.sum(F.abs(F.col("rank") - F.col("r0"))), F.lit(0.0)).alias("l1"),
+        F.coalesce(
+            F.sum(F.when(F.col("_dangling") & present, F.col("rank"))), F.lit(0.0)
+        ).alias("dm"),
+    ]
+
+    def delta(observed: dict) -> float:
+        nonlocal dm
+        dm = observed["dm"]
+        return observed["l1"]
 
     runner = PregelRunner(
         spark,
@@ -222,15 +194,10 @@ def pagerank(
         tol=n_nodes * tol,
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
-        check_interval=check_interval,
-        # the step consumes ranks linearly (single reference in the gather
-        # join), so the soft-persist chain is safe and saves one job/iter
-        truncate_interval=4,
         retain_snapshots=retain_snapshots,
     )
-    result = runner.run(init, step, l1_delta, start_iteration=start_iteration)
+    result = runner.run(init, step, scalars, delta, start_iteration=start_iteration)
     scatter.unpersist()
-    dangling.unpersist()
     if pvec is not None:
         pvec.unpersist()
     ids.unpersist()

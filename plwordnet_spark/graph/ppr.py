@@ -20,7 +20,9 @@ Semantics per seed are IDENTICAL to
   front,
 * convergence: MAX over seeds of the per-seed L1 delta, against the
   same ``n_nodes · tol`` bound the single-vector path uses (the batch
-  runs until its slowest seed converges).
+  runs until its slowest seed converges). Each seed's L1 is one
+  conditional sum observed on the round's checkpoint; the driver takes
+  the max over the K values.
 
 Scale shape: the per-iteration shuffles are ONE rank join on ``src``
 (scatter side pre-partitioned and cached, never re-exchanged) and ONE
@@ -28,8 +30,9 @@ Scale shape: the per-iteration shuffles are ONE rank join on ``src``
 composite key spreads each seed's hub traffic across K·n keys. The
 per-seed dangling masses are a K-row aggregate that stays distributed
 (joined back, never collected). State is referenced three times per
-step (gather join, dangling scan, delta), so the loop hard-truncates
-lineage every iteration (truncate_interval=1).
+step (gather join, dangling scan, the previous rank carried for the
+L1); the runner materializes every round, so each reference reads that
+checkpoint rather than re-running the previous step.
 """
 
 from __future__ import annotations
@@ -94,8 +97,8 @@ def ppr_batch(
         .join(ids.withColumnRenamed("id", "seed"), "seed", "left_semi")
         .cache()
     )
-    n_seeds = seeds_df.count()
-    if n_seeds == 0:
+    roster = [r.seed for r in seeds_df.collect()]
+    if not roster:
         seeds_df.unpersist()
         ids.unpersist()
         return PregelResult(
@@ -144,31 +147,27 @@ def ppr_batch(
             teleport = teleport.select(
                 "id", "seed", F.lit(1.0 - alpha).alias("r")
             )
-        return (
+        new = (
             gathered.select("id", "seed", (F.lit(alpha) * F.col("inc")).alias("r"))
             .unionByName(teleport)
             .groupBy("id", "seed")
             .agg(F.sum("r").alias("rank"))
         )
+        if not scalars:
+            return new
+        # every reached pair is re-reached each round (the teleport
+        # re-seeds its walk), so the state only grows and a left join
+        # from the new rows sees every previous row: the full-outer L1
+        return new.join(state.withColumnRenamed("rank", "r0"), ["id", "seed"], "left")
 
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        joined = old.withColumnRenamed("rank", "r0").join(
-            new, ["id", "seed"], "full"
-        )
-        row = (
-            joined.groupBy("seed")
-            .agg(
-                F.sum(
-                    F.abs(
-                        F.coalesce(F.col("rank"), F.lit(0.0))
-                        - F.coalesce(F.col("r0"), F.lit(0.0))
-                    )
-                ).alias("l1")
-            )
-            .agg(F.max("l1"))
-            .first()
-        )
-        return float(row[0] or 0.0)
+    # fixed-k mode (tol <= 0) carries and observes nothing: the K
+    # per-seed sums cost K conditional aggregates per state row
+    l1 = F.abs(F.col("rank") - F.coalesce(F.col("r0"), F.lit(0.0)))
+    scalars = [
+        F.coalesce(F.sum(F.when(F.col("seed") == s, l1)), F.lit(0.0)).alias(f"l1_{s}")
+        for s in roster
+    ] if tol > 0 else []
+    delta = (lambda observed: max(observed.values())) if scalars else None
 
     runner = PregelRunner(
         spark,
@@ -176,13 +175,12 @@ def ppr_batch(
         tol=n_nodes * tol,
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
-        truncate_interval=1,  # step references state 3x — no soft chains
     )
     if resume and checkpoint_dir is None:
         raise ValueError("resume requires a checkpoint_dir")
-    res = runner.resume(step, delta if tol > 0 else None) if resume else None
+    res = runner.resume(step, scalars, delta) if resume else None
     if res is None:  # fresh run, or resume over an empty store
-        res = runner.run(init, step, delta if tol > 0 else None)
+        res = runner.run(init, step, scalars, delta)
     state = res.state.select("id", "seed", "rank")
     scatter.unpersist()
     dangling.unpersist()

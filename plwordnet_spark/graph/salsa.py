@@ -125,20 +125,13 @@ def salsa(
         )
         a_n = _l1(ids.join(a_new, "id", "left").na.fill({"authority": 0.0}), "authority")
         h_n = _l1(ids.join(h_new, "id", "left").na.fill({"hub": 0.0}), "hub")
-        return a_n.join(h_n, "id")
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "id")
-            .agg(
-                F.sum(
-                    F.abs(F.col("n.authority") - F.col("o.authority"))
-                    + F.abs(F.col("n.hub") - F.col("o.hub"))
-                ).alias("d")
-            )
-            .collect()[0]["d"]
+        # the previous scores ride along as a0/h0 for the L1 scalar
+        prev = state.select(
+            "id", F.col("authority").alias("a0"), F.col("hub").alias("h0")
         )
+        return a_n.join(h_n, "id").join(prev, "id", "left")
+
+    l1 = F.abs(F.col("authority") - F.col("a0")) + F.abs(F.col("hub") - F.col("h0"))
 
     runner = PregelRunner(
         spark,
@@ -147,7 +140,7 @@ def salsa(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    result = runner.run(init, step, delta if tol else None)
+    result = runner.run(init, step, [F.sum(l1).alias("l1")], lambda o: o["l1"])
 
     for df in (ids, links, outd, ind):
         df.unpersist()

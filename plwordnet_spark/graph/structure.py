@@ -49,7 +49,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelRunner
+from plwordnet_spark.graph.pregel import PregelRunner, frontier_scalars
 
 __all__ = [
     "reciprocity",
@@ -566,12 +566,8 @@ def condensation_levels(
             improved.alias("changed"),
         )
 
-    def delta(old: DataFrame, new: DataFrame):
-        frontier_rows = new.filter(F.col("changed")).count()
-        return float(frontier_rows), {"frontier_rows": frontier_rows}
-
     runner = PregelRunner(spark, max_iterations=max_iterations, tol=0.5)
-    res = runner.run(init, step, delta)
+    res = runner.run(init, step, *frontier_scalars())
     if not res.converged:
         raise RuntimeError(
             "condensation did not stabilize within max_iterations — "

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from plwordnet_spark.graph.bfs import _source_ids
-from plwordnet_spark.graph.pregel import PregelResult, PregelRunner
+from plwordnet_spark.graph.pregel import PregelResult, PregelRunner, frontier_scalars
 
 __all__ = ["temporal_reachability"]
 
@@ -125,10 +125,6 @@ def temporal_reachability(
             improved.alias("changed"),
         )
 
-    def delta(old: DataFrame, new: DataFrame):
-        frontier_rows = new.filter(F.col("changed")).count()
-        return float(frontier_rows), {"frontier_rows": frontier_rows}
-
     runner = PregelRunner(
         spark,
         max_iterations=max_iterations,
@@ -136,7 +132,7 @@ def temporal_reachability(
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
     )
-    res = runner.run(init, step, delta)
+    res = runner.run(init, step, *frontier_scalars())
     state = res.state.select("id", F.col("arr").alias("arrival"))
     rel.unpersist()
     return PregelResult(

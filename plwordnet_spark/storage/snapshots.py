@@ -117,8 +117,8 @@ class SnapshotStore:
 
     def update_metrics(self, iteration: int, metrics: dict) -> None:
         """Patch the metrics of the newest snapshot for ``iteration`` —
-        used by the Pregel runner, which learns the convergence delta
-        only after the snapshot is committed."""
+        for a statistic that is only known after the commit (EdgeLog's
+        rescan of a compacted legacy chain)."""
         entries = self.manifest()
         for entry in reversed(entries):
             if entry["iteration"] == iteration:

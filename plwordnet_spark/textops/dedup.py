@@ -211,7 +211,7 @@ def minhash_lsh_dedup(
     from plwordnet_spark.graph.components import connected_components
 
     edges = dup_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    assign = connected_components(spark, edges, method="two-phase").state
+    assign = connected_components(spark, edges).state
     drop = assign.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )

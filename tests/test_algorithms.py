@@ -108,15 +108,14 @@ def test_connected_components_exact(spark, graphs):
         if edges is None:
             continue
         nodes = spark.createDataFrame([(int(n),) for n in g.nodes()], "id long")
-        for method in ("two-phase", "hashmin"):
-            result = connected_components(spark, edges, nodes=nodes, method=method)
-            got = {r.id: r.component for r in result.state.collect()}
-            expected = {}
-            for comp in nx.connected_components(und):
-                root = min(comp)
-                for n in comp:
-                    expected[int(n)] = int(root)
-            assert got == expected, (name, method)
+        result = connected_components(spark, edges, nodes=nodes)
+        got = {r.id: r.component for r in result.state.collect()}
+        expected = {}
+        for comp in nx.connected_components(und):
+            root = min(comp)
+            for n in comp:
+                expected[int(n)] = int(root)
+        assert got == expected, name
 
 
 def _lpa_oracle(edge_list, node_ids, max_iterations):

@@ -29,7 +29,7 @@ def test_cli_graph_pipeline(tmp_path, capsys):
     pr = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert pr["converged"]
 
-    assert cli.main(["components", "--graph", graph_dir, "--method", "hashmin"]) == 0
+    assert cli.main(["components", "--graph", graph_dir]) == 0
     cc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert cc["components"] >= 1
 

@@ -54,8 +54,8 @@ def test_corpus_record_total_function(page_id):
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.integers(min_value=0, max_value=10_000))
 def test_cc_methods_agree(spark, graph_seed):
-    """large-star/small-star and hash-min must produce identical
-    components on random graphs."""
+    """large-star/small-star must produce networkx's components, each
+    labelled by its minimum node id, on random graphs."""
     from plwordnet_spark.graph.components import connected_components
 
     rng = random.Random(graph_seed)
@@ -68,15 +68,16 @@ def test_cc_methods_agree(spark, graph_seed):
         "src long, dst long, weight double",
     )
     nodes = spark.createDataFrame([(int(x),) for x in g.nodes()], "id long")
-    a = {
+    got = {
         r.id: r.component
-        for r in connected_components(spark, edges, nodes=nodes, method="two-phase").state.collect()
+        for r in connected_components(spark, edges, nodes=nodes).state.collect()
     }
-    b = {
-        r.id: r.component
-        for r in connected_components(spark, edges, nodes=nodes, method="hashmin").state.collect()
+    want = {
+        int(x): int(min(comp))
+        for comp in nx.connected_components(g.to_undirected())
+        for x in comp
     }
-    assert a == b
+    assert got == want
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])

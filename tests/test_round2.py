@@ -90,7 +90,7 @@ def test_minhash_cc_over_pair_ids_only(spark):
     pair_ids = {r.id_a for r in pair_rows} | {r.id_b for r in pair_rows}
     # the CC the dedup runs internally covers exactly the pair ids
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    cc_state = connected_components(spark, edges, method="two-phase").state
+    cc_state = connected_components(spark, edges).state
     assert cc_state.count() == len(pair_ids)
     # non-participating docs are singletons and always kept
     kept_ids = {r.doc_id for r in kept.collect()}

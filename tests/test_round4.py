@@ -254,7 +254,6 @@ def test_ppr_batch_matches_single_personalized(spark):
             personalization=spark.createDataFrame(
                 [(s, 1.0)], "id long, p double"
             ),
-            check_interval=1,
         )
         want = {r.id: r.rank for r in single.state.collect()}
         for node, v in want.items():

@@ -63,7 +63,6 @@ def main() -> None:
             pers = spark.createDataFrame([(s, 1.0)], "id long, p double")
             res = pagerank(
                 spark, edges, tol=0.0, max_iterations=args.iters,
-                check_interval=args.iters,
                 personalization=pers,
             )
             total += res.state.filter(F.col("rank") > 0).count()

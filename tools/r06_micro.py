@@ -75,8 +75,7 @@ def main() -> None:
         from plwordnet_spark.graph.pagerank import pagerank
 
         big = need_big()
-        return pagerank(spark, big, tol=0.0, max_iterations=10,
-                        check_interval=5)
+        return pagerank(spark, big, tol=0.0, max_iterations=10)
 
     def op_bfs_big():
         from plwordnet_spark.graph.bfs import bfs_distances

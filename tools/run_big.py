@@ -87,7 +87,6 @@ def main() -> None:
     t0 = time.time()
     res = pagerank(
         spark, edges, tol=0.0, max_iterations=args.iters,
-        check_interval=5,
     )
     sec = time.time() - t0
     res.state.count()
