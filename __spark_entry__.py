@@ -2060,10 +2060,6 @@ def _attack_oracle_sql(fracs=_ATTACK_FRACS, mode: str = "degree") -> str:
         from plwordnet_spark.textops.sampling import SAMPLE_A, SAMPLE_B, SAMPLE_P
 
         order = (
-            f"((id + 1) % {SAMPLE_P}) * {SAMPLE_A} + {SAMPLE_B}"
-            f" % {SAMPLE_P}, id"
-        )
-        order = (
             f"(((id + 1) % {SAMPLE_P}) * {SAMPLE_A} + {SAMPLE_B})"
             f" % {SAMPLE_P}, id"
         )

@@ -22,10 +22,15 @@ driver oracles are a recursive CTE (BFS) and unrolled relaxation (SSSP).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from plwordnet_spark.graph.pregel import PregelResult, PregelRunner, frontier_scalars
+from plwordnet_spark.graph.pregel import (
+    PregelResult,
+    PregelRunner,
+    _checkpoint,
+    frontier_scalars,
+)
 from plwordnet_spark.storage.snapshots import SnapshotStore
 
 __all__ = [
@@ -328,9 +333,13 @@ def delta_stepping_sssp(
     (golden-tested); per-round metrics carry ``bucket`` and
     ``frontier_rows``.
 
-    Driver sees two scalars per round (pending-min for bucket selection
-    happens once per bucket); state is (id, dist, changed) where
-    ``changed`` marks PENDING nodes — improved since they last emitted.
+    Each round is one Spark action, the eager checkpoint of the new
+    state; its two driver scalars — the round's ``frontier_rows`` and the
+    minimum pending distance that picks the next bucket — ride that
+    action as observed aggregates. Only the first round, from the
+    initial or resumed state, runs its own min. State is (id, dist,
+    changed) where ``changed`` marks PENDING nodes — improved since
+    they last emitted.
 
     **Checkpoint/resume** (same contract as the PregelRunner ops): with
     ``checkpoint_dir`` set, every ``checkpoint_interval``-th round writes
@@ -408,6 +417,17 @@ def delta_stepping_sssp(
             # resume point while the newest commit is in flight)
             store.prune(keep_last=2)
 
+    def _materialize(new_state: DataFrame, frontier: Column) -> tuple[DataFrame, dict]:
+        """The round's one action: checkpoint ``new_state``, observing
+        its ``frontier`` row count and its minimum pending distance."""
+        obs = Observation()
+        checkpointed = _checkpoint(new_state.observe(
+            obs,
+            F.count_if(frontier).alias("frontier_rows"),
+            F.min(F.when(F.col("changed"), F.col("dist"))).alias("min_pending"),
+        ))
+        return checkpointed, obs.get
+
     def _relax(frontier_filter, edge_table, clear_emitted: bool) -> DataFrame:
         """One synchronous relax round: emit from changed∩filter rows,
         fold min offers into state, recompute pending flags."""
@@ -431,10 +451,11 @@ def delta_stepping_sssp(
             (improved | pending_kept).alias("changed"),
         )
 
-    def _heavy_round(bucket: int) -> None:
+    def _heavy_round(bucket: int) -> float | None:
         """One heavy relax from the drained bucket's settled nodes;
-        mutates state/rounds/metrics. Settled rows have changed=False,
-        so the whole settled window is treated as the frontier."""
+        mutates state/rounds/metrics and returns the minimum pending
+        distance after it. Settled rows have changed=False, so the whole
+        settled window is treated as the frontier."""
         nonlocal state, rounds
         rounds += 1
         bound = F.lit((bucket + 1) * delta)
@@ -448,15 +469,18 @@ def delta_stepping_sssp(
         improved = F.col("nbr_dist").isNotNull() & (
             F.col("dist").isNull() | (F.col("nbr_dist") < F.col("dist"))
         )
-        new_state = state.join(relaxed, "id", "left").select(
-            "id",
-            F.least(F.col("dist"), F.col("nbr_dist")).alias("dist"),
-            (improved | F.col("changed")).alias("changed"),
-            improved.alias("_improved"),
-        ).localCheckpoint(eager=True)
         # frontier_rows = actual heavy relaxations (rows improved by
         # THIS phase), not the count of all still-pending rows
-        relaxed_rows = new_state.filter("_improved").count()
+        new_state, seen = _materialize(
+            state.join(relaxed, "id", "left").select(
+                "id",
+                F.least(F.col("dist"), F.col("nbr_dist")).alias("dist"),
+                (improved | F.col("changed")).alias("changed"),
+                improved.alias("_improved"),
+            ),
+            F.col("_improved"),
+        )
+        relaxed_rows = seen["frontier_rows"]
         entry = {"iteration": rounds, "bucket": bucket, "phase": "heavy",
                  "frontier_rows": relaxed_rows, "delta": float(relaxed_rows)}
         metrics.append(entry)
@@ -466,16 +490,18 @@ def delta_stepping_sssp(
         # unpersist releases it); the stray _improved column is
         # dropped by the next _relax select / the final projection
         state = new_state
+        return seen["min_pending"]
 
     if pending_heavy_bucket is not None and rounds < max_rounds:
         # resume landed on a drain-round snapshot: finish the killed
         # bucket's heavy phase before re-entering the outer loop
-        _heavy_round(pending_heavy_bucket)
+        min_pending = _heavy_round(pending_heavy_bucket)
+    elif rounds < max_rounds:
+        min_pending = state.filter("changed").agg(F.min("dist")).first()[0]
     while rounds < max_rounds:
         # next bucket = floor(min pending dist / Δ); the minimum
         # pending distance is final (no smaller pending node exists
         # to improve it), so the bucket choice is safe
-        min_pending = state.filter("changed").agg(F.min("dist")).first()[0]
         if min_pending is None:
             converged = True
             break
@@ -484,9 +510,10 @@ def delta_stepping_sssp(
         # inner: light-edge fixpoint within the bucket
         while rounds < max_rounds:
             rounds += 1
-            new_state = _relax(in_bucket, light, clear_emitted=True)
-            new_state = new_state.localCheckpoint(eager=True)
-            active = new_state.filter(F.col("changed") & in_bucket).count()
+            new_state, seen = _materialize(
+                _relax(in_bucket, light, clear_emitted=True), F.col("changed") & in_bucket
+            )
+            active, min_pending = seen["frontier_rows"], seen["min_pending"]
             entry = {"iteration": rounds, "bucket": bucket, "phase": "light",
                      "frontier_rows": active, "delta": float(active)}
             metrics.append(entry)
@@ -505,7 +532,7 @@ def delta_stepping_sssp(
         # plain frontier Bellman-Ford)
         if n_heavy == 0:
             continue
-        _heavy_round(bucket)
+        min_pending = _heavy_round(bucket)
     if store is not None:
         # final durable snapshot so resume() always sees the end
         # state, whether the loop converged or hit the round budget

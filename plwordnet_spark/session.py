@@ -19,6 +19,7 @@ logical plans behave well on a multi-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 import zipfile
 from collections.abc import Mapping
@@ -152,10 +153,10 @@ def stop_spark() -> None:
 
 
 def _parallelism_of(master: str) -> int:
-    """Parse N out of local[N]; fall back to the host's CPU count."""
-    if master.startswith("local[") and master.endswith("]"):
-        try:
-            return int(master[len("local[") : -1])
-        except ValueError:
-            pass
-    return _host_cpus()
+    """Task slots of a local master: N of ``local[N]``, n*c of
+    ``local-cluster[n,c,m]`` (n executors of c cores); the host's CPU
+    count for any other master."""
+    m = re.fullmatch(r"local\[(\d+)\]|local-cluster\[(\d+),\s*(\d+),\s*\d+\]", master)
+    if m is None:
+        return _host_cpus()
+    return int(m[1]) if m[1] else int(m[2]) * int(m[3])

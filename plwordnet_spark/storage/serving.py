@@ -17,12 +17,11 @@ rebuildable read replica of a key→row projection, exactly the shape a
 Milvus/serving tier holds next to a 100-TB lakehouse.
 
 Scale contract: one ``PointIndex`` holds one shard. At web scale the
-key space is hash-sharded with ``shard()`` (the same pmod-hash Spark's
-bucketed writer uses, so one shard == one bucket's key set) and each
-serving node builds its own shard from the bucketed table — the build
-reads only that bucket's files (SelectedBucketsCount pruning). The
-``max_rows`` cap makes the single-process memory bound explicit instead
-of discovering it with an OOM.
+key space is hash-sharded with ``shard()`` (the positive-mod Murmur3
+hash Spark's ``bucketBy`` writer assigns bucket ids with) and each
+serving node builds its own shard. The ``max_rows`` cap makes the
+single-process memory bound explicit instead of discovering it with an
+OOM.
 """
 
 from __future__ import annotations
@@ -79,9 +78,9 @@ class PointIndex:
     @staticmethod
     def shard(df: DataFrame, key_col: str, n_shards: int, shard_id: int) -> DataFrame:
         """Restrict ``df`` to one hash shard of the key space, using the
-        same positive-mod Murmur3 hash Spark's bucketed writer assigns
-        bucket ids with — so ``shard(df, k, B, i)`` over a table written
-        ``bucketBy(B, k)`` scans exactly bucket ``i``'s files."""
+        positive-mod Murmur3 hash Spark's ``bucketBy`` writer assigns
+        bucket ids with — so shard ``i`` of ``B`` holds the key set of
+        bucket ``i`` of a table written ``bucketBy(B, k)``."""
         return df.filter(F.pmod(F.hash(F.col(key_col)), F.lit(n_shards)) == shard_id)
 
     def lookup(self, key: Any) -> dict | None:

@@ -115,17 +115,6 @@ class SnapshotStore:
 
         shutil.rmtree(staged_path, ignore_errors=True)
 
-    def update_metrics(self, iteration: int, metrics: dict) -> None:
-        """Patch the metrics of the newest snapshot for ``iteration`` —
-        for a statistic that is only known after the commit (EdgeLog's
-        rescan of a compacted legacy chain)."""
-        entries = self.manifest()
-        for entry in reversed(entries):
-            if entry["iteration"] == iteration:
-                entry["metrics"].update(metrics)
-                break
-        self._write_manifest(entries)
-
     def prune(self, keep_last: int = 2) -> list[int]:
         """Retention: drop all but the newest ``keep_last`` snapshots
         (Iceberg ``expireSnapshots`` analog). Data directories are

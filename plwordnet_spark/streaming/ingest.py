@@ -23,7 +23,9 @@ sink is an Iceberg table where deltas are appends and compaction is
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import base64
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from plwordnet_spark.corpus import PAGES_SCHEMA
@@ -64,6 +66,13 @@ class EdgeLog:
     base and expires the chain, bounding both read fan-in and disk —
     expired manifest entries keep their metrics, so batch-replay
     fingerprints survive retention.
+
+    Every manifest entry carries ``kind`` and an ``edge_hll`` sketch;
+    :meth:`merge_batch` deltas also carry the ``batch_id`` + (url, html)
+    ``content_hash`` replay fingerprint. A log written in the pre-delta
+    format (no ``kind`` markers, url-only fingerprints) is not a
+    supported input: it is not read correctly and its replays are not
+    detected.
     """
 
     def __init__(self, spark: SparkSession, root: str, compact_every: int = 8):
@@ -76,13 +85,10 @@ class EdgeLog:
     # -- read path ---------------------------------------------------------
     def _chain(self) -> list[dict]:
         """Live manifest entries from the newest base onward (all live
-        entries when no base exists yet). Entries with no ``kind`` metric
-        are LEGACY snapshots from the pre-delta format, where every
-        snapshot was a full merged table — each is therefore a base;
-        summing them as deltas would multiply weights."""
+        entries when no base exists yet)."""
         live = [e for e in self.store.manifest() if not e.get("expired")]
         for i in range(len(live) - 1, -1, -1):
-            if live[i].get("metrics", {}).get("kind", "base") == "base":
+            if live[i]["metrics"]["kind"] == "base":
                 return live[i:]
         return live
 
@@ -103,51 +109,22 @@ class EdgeLog:
         return merged, newest
 
     # -- write path --------------------------------------------------------
-    def seen(self, batch_id: int, content_hash: str, legacy_hash: str | None = None) -> bool:
+    def seen(self, batch_id: int, content_hash: str) -> bool:
         """True if a batch with this (id, content fingerprint) was already
-        appended — scans ALL manifest entries, expired included.
-
-        ``legacy_hash``: the url-only fingerprint the pre-delta format
-        stored (no ``fp_version`` marker on its entries). Matching it for
-        legacy entries keeps replay protection intact for edge logs
-        written before the fingerprint started covering html bytes."""
-        for entry in self.store.manifest():
-            m = entry.get("metrics", {})
-            if m.get("batch_id") != int(batch_id):
-                continue
-            if m.get("fp_version") == 2:
-                if m.get("content_hash") == content_hash:
-                    return True
-            elif legacy_hash is not None and m.get("content_hash") == legacy_hash:
-                return True
-        return False
-
-    def _edge_sketch_b64(self, edges: DataFrame) -> str:
-        """HLL sketch of the snapshot's distinct edge keys, serialized
-        for the manifest (the Iceberg per-snapshot-NDV-stats analog).
-        Edge keys merge additively across snapshots, so the folded
-        table's distinct-edge count is exactly the UNION of per-snapshot
-        key sets — mergeable without rescanning any data."""
-        import base64
-
-        row = edges.agg(
-            F.expr("hll_sketch_agg(xxhash64(src, dst, rel_id))").alias("s")
-        ).first()
-        return base64.b64encode(bytes(row["s"])).decode() if row["s"] is not None else ""
-
-    def _union_sketch_b64(self, sketches: list[str | None]) -> str | None:
-        """Metadata-only merge of per-snapshot HLL sketches (Iceberg
-        stats-merge analog); None when any snapshot predates the sketches
-        (legacy format) — callers then fall back to rescanning data."""
-        import base64
-
-        if not sketches or any(not s for s in sketches):
-            return None
-        df = self.spark.createDataFrame(
-            [(base64.b64decode(s),) for s in sketches], "s binary"
+        appended — scans ALL manifest entries, expired included."""
+        return any(
+            m.get("batch_id") == int(batch_id) and m.get("content_hash") == content_hash
+            for m in (e["metrics"] for e in self.store.manifest())
         )
-        row = df.agg(F.expr("hll_union_agg(s)").alias("u")).first()
-        return base64.b64encode(bytes(row["u"])).decode() if row["u"] is not None else None
+
+    def _sketches(self, chain: list[dict]) -> DataFrame:
+        """The chain's per-snapshot HLL sketches as rows, for a
+        metadata-only merge (Iceberg stats-merge analog): edge keys merge
+        additively across snapshots, so the folded table's distinct-edge
+        key set is exactly the union of the per-snapshot key sets."""
+        return self.spark.createDataFrame(
+            [(base64.b64decode(e["metrics"]["edge_hll"]),) for e in chain], "s binary"
+        )
 
     def append(self, delta_edges: DataFrame, batch_id: int, metrics: dict) -> None:
         """Commit one micro-batch's edges as a delta snapshot; compact
@@ -161,23 +138,19 @@ class EdgeLog:
         the snapshot-write job itself — one job, one scan, and the
         sketch lands IN the commit (no patch window where a crash could
         leave a committed delta without its stats)."""
-        import base64
-
-        from pyspark.sql import Observation
-
         obs = Observation()
         observed = delta_edges.select(*_EDGE_COLS).observe(
             obs, F.expr("hll_sketch_agg(xxhash64(src, dst, rel_id))").alias("s")
         )
         staged = self.store.stage(observed)  # the one job
-        sketch = obs.get["s"]  # collected by the staged write; None on 0 rows
+        sketch = obs.get["s"]  # collected by the staged write
         self.store.commit_staged(
             staged,
             iteration=int(batch_id),
             metrics={
                 **metrics,
                 "kind": "delta",
-                "edge_hll": base64.b64encode(bytes(sketch)).decode() if sketch else "",
+                "edge_hll": base64.b64encode(bytes(sketch)).decode(),
             },
         )
         self._maybe_compact()
@@ -201,10 +174,6 @@ class EdgeLog:
         truth). Replays therefore pay one wasted write, while the common
         case pays exactly one job — the Iceberg
         write-data-files-then-commit-snapshot protocol."""
-        import base64
-
-        from pyspark.sql import Observation
-
         obs_fp = Observation()
         obs_sk = Observation()
         observed_pages = batch_pages.observe(
@@ -213,19 +182,14 @@ class EdgeLog:
             F.coalesce(
                 F.sum(F.xxhash64("url", "html").cast("decimal(38,0)")), F.lit(0)
             ).alias("h"),
-            # url-only fingerprint, same scan: matches entries written by
-            # the pre-delta format so their replay guard keeps working
-            F.coalesce(
-                F.sum(F.xxhash64("url").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h_legacy"),
         )
         edges = _batch_edges(observed_pages).select(*_EDGE_COLS).observe(
             obs_sk, F.expr("hll_sketch_agg(xxhash64(src, dst, rel_id))").alias("s")
         )
         staged = self.store.stage(edges)  # the one job
         fp = obs_fp.get
-        content_hash, legacy_hash = str(fp["h"]), str(fp["h_legacy"])
-        if self.seen(batch_id, content_hash, legacy_hash=legacy_hash):
+        content_hash = str(fp["h"])
+        if self.seen(batch_id, content_hash):
             self.store.abandon_staged(staged)
             return False
         sketch = obs_sk.get["s"]
@@ -236,9 +200,8 @@ class EdgeLog:
                 "batch_id": int(batch_id),
                 "pages_in_batch": int(fp["n"]),
                 "content_hash": content_hash,
-                "fp_version": 2,
                 "kind": "delta",
-                "edge_hll": base64.b64encode(bytes(sketch)).decode() if sketch else "",
+                "edge_hll": base64.b64encode(bytes(sketch)).decode(),
             },
         )
         self._maybe_compact()
@@ -249,34 +212,20 @@ class EdgeLog:
         last base reaches ``compact_every``; the new base's sketch is the
         METADATA-ONLY HLL union of the chain's sketches (edge keys merge
         additively, so the folded key set is exactly the union — no data
-        rescan). Only a legacy chain entry without a sketch forces the
-        rescan fallback, and that reads the just-written compact base,
-        not the pre-fold chain."""
+        rescan)."""
         chain = self._chain()
-        # default missing 'kind' to "base" exactly as _chain() does —
-        # legacy (pre-delta-format) snapshots are bases; counting them as
-        # deltas here would trigger compaction earlier than compact_every
-        n_deltas = sum(
-            1 for e in chain if e.get("metrics", {}).get("kind", "base") != "base"
-        )
+        n_deltas = sum(1 for e in chain if e["metrics"]["kind"] == "delta")
         if n_deltas < self.compact_every:
             return
         merged, newest = self.latest()
-        base_hll = self._union_sketch_b64(
-            [e.get("metrics", {}).get("edge_hll") for e in chain]
-        )
-        written_base = self.store.write(
+        union = self._sketches(chain).agg(F.expr("hll_union_agg(s)").alias("u")).first()
+        self.store.write(
             merged,
             iteration=int(newest["iteration"]),
             metrics={"kind": "base",
                      "compacted_through": newest["snapshot_id"],
-                     "edge_hll": base_hll or ""},
+                     "edge_hll": base64.b64encode(bytes(union["u"])).decode()},
         )
-        if not base_hll:  # legacy chain: one rescan of the compact base
-            self.store.update_metrics(
-                int(newest["iteration"]),
-                {"edge_hll": self._edge_sketch_b64(written_base)},
-            )
         # the new base is the only snapshot a reader needs; expire the
         # folded chain (manifest metrics survive for replay detection)
         self.store.prune(keep_last=1)
@@ -285,22 +234,12 @@ class EdgeLog:
         """Distinct (src, dst, rel_id) edge count of the CURRENT folded
         table, estimated by merging the live chain's manifest sketches —
         no data files are read (at a 100 TB table this is the difference
-        between a metadata lookup and a full scan). Falls back to an
-        exact count over :meth:`latest` when any live snapshot predates
-        the sketches (legacy format). None on an empty log."""
-        import base64
-
+        between a metadata lookup and a full scan). None on an empty
+        log."""
         chain = self._chain()
         if not chain:
             return None
-        sketches = [e.get("metrics", {}).get("edge_hll") for e in chain]
-        if any(not s for s in sketches):
-            latest = self.latest()
-            return latest[0].count() if latest else None
-        df = self.spark.createDataFrame(
-            [(base64.b64decode(s),) for s in sketches], "s binary"
-        )
-        row = df.agg(
+        row = self._sketches(chain).agg(
             F.expr("hll_sketch_estimate(hll_union_agg(s))").alias("n")
         ).first()
         return int(row["n"])

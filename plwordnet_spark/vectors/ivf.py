@@ -19,9 +19,8 @@ Spark-first shape — every stage is a DataFrame plan:
   k-means‖ sampler instead; determinism here is what makes the operator
   oracle- and test-able).
 * **Index** (:func:`ivf_assign`): one broadcast join adds a ``bucket``
-  column; persisting the corpus partitioned/bucketed by it makes a
-  probe read only matching files (same layout trick as
-  storage/bucketed.py).
+  column; persisting the corpus partitioned by it makes a probe read
+  only matching files.
 * **Search** (:func:`ivf_topk`): queries × broadcast centroids → each
   query's ``nprobe`` best buckets → hash join on ``bucket`` against the
   indexed corpus → exact cosine re-rank inside the probed slice →

@@ -3,6 +3,8 @@ incremental ingest, size-conditional broadcast, HITS job-count cuts."""
 
 from __future__ import annotations
 
+import base64
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,66 +176,26 @@ def test_edgelog_sketch_stats_match_exact(spark, tmp_path):
     est = log.approx_distinct_edges()
     assert est == exact  # tiny cardinality → HLL is exact
     # every live entry carries a sketch
-    assert all(e["metrics"].get("edge_hll") for e in log._chain())
-    # legacy entries without sketches fall back to the exact count
-    manifest = log.store.manifest()
-    del manifest[0]["metrics"]["edge_hll"]
-    log.store._write_manifest(manifest)
+    assert all(e["metrics"]["edge_hll"] for e in log._chain())
+    # a 0-row delta still stores a real (empty) sketch, so the estimate
+    # needs no exact-count fallback
+    log.append(mk([]), 2, {"batch_id": 2})
+    assert len(log._chain()) == 3
+    assert all(e["metrics"]["edge_hll"] for e in log._chain())
     assert log.approx_distinct_edges() == exact
-
-
-def test_edgelog_reads_and_guards_legacy_format(spark, tmp_path):
-    """Pre-delta-format logs: every snapshot was a FULL merged table with
-    a url-only fingerprint and no 'kind' marker. The reader must treat a
-    legacy snapshot as a base (summing it as a delta would multiply
-    weights) and the replay guard must still recognize legacy
-    fingerprints (else a replay double-appends)."""
-    from pyspark.sql import functions as F
-
-    from plwordnet_spark.corpus import generate_pages
-    from plwordnet_spark.storage.snapshots import SnapshotStore
-    from plwordnet_spark.streaming.ingest import (
-        EdgeLog,
-        _batch_edges,
-        read_page_stream,
-        stream_pages_to_edges,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    edges_dir = str(tmp_path / "edges")
-    generate_pages(spark, 60, seed=42).write.parquet(pages_dir)
-    pages = spark.read.parquet(pages_dir)
-
-    # hand-write a LEGACY snapshot: full merged table, url-only hash,
-    # no kind / fp_version markers (the pre-delta on-disk format)
-    legacy_hash = str(
-        pages.agg(
-            F.coalesce(F.sum(F.xxhash64("url").cast("decimal(38,0)")), F.lit(0))
-        ).first()[0]
-    )
-    store = SnapshotStore(spark, edges_dir)
-    full = _batch_edges(pages)
-    store.write(full, iteration=0, metrics={
-        "batch_id": 0, "pages_in_batch": 60, "content_hash": legacy_hash,
-    })
-    want = sorted((r.src, r.dst, r.rel_id, r.weight) for r in full.collect())
-
-    # reader: the legacy snapshot is a base, returned as-is
-    log = EdgeLog(spark, edges_dir)
-    got = sorted((r.src, r.dst, r.rel_id, r.weight) for r in log.latest()[0].collect())
-    assert got == want
-
-    # replay of the same pages with a fresh checkpoint (single batch):
-    # the legacy fingerprint must be recognized — no new snapshots, no
-    # weight doubling
-    q = stream_pages_to_edges(
-        spark, read_page_stream(spark, pages_dir, max_files_per_trigger=100),
-        edges_dir, str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    assert len(log.store.manifest()) == 1
-    got2 = sorted((r.src, r.dst, r.rel_id, r.weight) for r in log.latest()[0].collect())
-    assert got2 == want
+    # compaction over [empty delta, 2-edge delta]: the base's sketch is
+    # the union of the chain's sketches alone (no rescan of the base)
+    tight = EdgeLog(spark, str(tmp_path / "tight"), compact_every=2)
+    tight.append(mk([]), 0, {"batch_id": 0})
+    tight.append(mk([(1, 2, 1, 1.0), (3, 4, 1, 1.0)]), 1, {"batch_id": 1})
+    *deltas, base = tight.store.manifest()
+    assert [e["metrics"]["kind"] for e in deltas] == ["delta", "delta"]
+    assert base["metrics"]["kind"] == "base" and tight._chain() == [base]
+    union = spark.createDataFrame(
+        [(base64.b64decode(e["metrics"]["edge_hll"]),) for e in deltas], "s binary"
+    ).agg(F.expr("hll_union_agg(s)").alias("u")).first()["u"]
+    assert base["metrics"]["edge_hll"] == base64.b64encode(bytes(union)).decode()
+    assert tight.approx_distinct_edges() == tight.latest()[0].count() == 2
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,11 @@
 """Round-4 additions: delta-stepping checkpoint/resume, landmark
-checkpointing, EdgeLog legacy compaction cadence, jaccard pair caching."""
+checkpointing, jaccard pair caching."""
 
 from __future__ import annotations
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _weighted_graph(spark, seed=1, n=40, m=160):
@@ -185,45 +184,6 @@ def test_landmark_distances_checkpoint_dir(spark, tmp_path):
     got = {(r.id, r.landmark): r.dist for r in ck.state.collect()}
     assert got == want
     assert SnapshotStore(spark, ckpt).latest() is not None
-
-
-# --- EdgeLog: legacy entries must not skew compaction cadence (ADVICE) ----
-
-
-def test_edgelog_legacy_entries_dont_trigger_early_compaction(spark, tmp_path):
-    """Snapshots without a 'kind' metric (pre-delta format) are bases in
-    _chain(); the compaction counter must default them the same way, or
-    one legacy base + one fresh delta would compact at compact_every=2."""
-    from plwordnet_spark.storage.snapshots import SnapshotStore
-    from plwordnet_spark.streaming.ingest import EdgeLog
-
-    root = str(tmp_path / "log")
-    legacy = spark.createDataFrame(
-        [(1, 2, 1, 1.0)], "src long, dst long, rel_id int, weight double"
-    )
-    SnapshotStore(spark, root).write(legacy, 0, {"batch_id": 0})  # no 'kind'
-    log = EdgeLog(spark, root, compact_every=2)
-    delta = spark.createDataFrame(
-        [(2, 3, 1, 1.0)], "src long, dst long, rel_id int, weight double"
-    )
-    log.append(delta, batch_id=1, metrics={"batch_id": 1})
-    kinds = [
-        e.get("metrics", {}).get("kind", "base")
-        for e in log.store.manifest() if not e.get("expired")
-    ]
-    # one legacy base + one delta, and NO compaction base appended yet
-    assert kinds == ["base", "delta"]
-    # a second delta reaches the threshold and compacts as configured
-    log.append(
-        spark.createDataFrame(
-            [(3, 4, 1, 1.0)], "src long, dst long, rel_id int, weight double"
-        ),
-        batch_id=2, metrics={"batch_id": 2},
-    )
-    live = [e for e in log.store.manifest() if not e.get("expired")]
-    assert [e["metrics"].get("kind", "base") for e in live] == ["base"]
-    merged, _ = log.latest()
-    assert merged.count() == 3
 
 
 # --- batched personalized PageRank (K seeds, one composite loop) ----------
@@ -422,40 +382,6 @@ def test_incremental_ingest_to_warm_pagerank(spark, tmp_path):
     assert got.keys() == want.keys()
     for k, v in want.items():
         assert got[k] == pytest.approx(v, abs=1e-8)
-
-
-# --- bucketed point lookup prunes to one bucket ---------------------------
-
-
-def test_bucket_pruned_point_lookup(spark):
-    """A key-equality lookup on a table bucketed by that key must scan
-    one bucket (SelectedBucketsCount: 1 out of N) and return the same
-    rows as the unbucketed scan."""
-    from plwordnet_spark.storage.bucketed import (
-        bucket_pruned_scans,
-        drop_table,
-        write_bucketed,
-    )
-
-    df = spark.range(200).select(
-        F.col("id").alias("vec_id"), (F.col("id") * 3).alias("payload")
-    )
-    # drop_table also clears a crashed earlier run's managed location
-    # (saveAsTable refuses with LOCATION_ALREADY_EXISTS otherwise)
-    drop_table(spark, "t_bucket_prune")
-    write_bucketed(df, "t_bucket_prune", ["vec_id"], n_buckets=8,
-                   sort_cols=["vec_id"])
-    lookup = spark.table("t_bucket_prune").filter(F.col("vec_id") == 42)
-    with bucket_pruned_scans(spark):
-        plan = lookup._jdf.queryExecution().toString()
-        assert "SelectedBucketsCount: 1 out of 8" in plan
-        assert [(r.vec_id, r.payload) for r in lookup.collect()] == [(42, 126)]
-    # outside the context the planner's auto rule is back in charge
-    assert (
-        spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-        == "true"
-    )
-    drop_table(spark, "t_bucket_prune")
 
 
 # --- exact_jaccard_for_pairs materializes unmaterialized pairs (ADVICE) ---

@@ -431,7 +431,7 @@ def test_merge_batch_single_job_commit_carries_sketch(spark, tmp_path):
     assert log.merge_batch(_pages(spark), batch_id=0) is True
     [entry] = log.store.manifest()
     m = entry["metrics"]
-    assert m["kind"] == "delta" and m["fp_version"] == 2
+    assert m["kind"] == "delta"
     assert m["pages_in_batch"] == 400
     assert m["content_hash"] and m["edge_hll"]
     # the sketch must estimate the actual distinct edge count

@@ -3,6 +3,10 @@ session is started here: the derivation is a pure function)."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
+import plwordnet_spark
 from plwordnet_spark.session import _host_defaults, _parallelism_of
 
 MEMINFO = "MemTotal:       16456384 kB\nMemFree:        15152188 kB\n"
@@ -24,5 +28,19 @@ def test_unknown_memory_leaves_spark_default():
 
 def test_parallelism_of_explicit_and_fallback():
     assert _parallelism_of("local[3]") == 3
+    assert _parallelism_of("local-cluster[2,1,1024]") == 2
     fallback = _parallelism_of("spark://cluster:7077")
     assert fallback == _parallelism_of("local[*]") and fallback >= 1
+
+
+def test_engine_never_writes_session_conf():
+    """Graph loops, streams and readers share one session: no module of
+    the engine may set or unset its conf (pure source scan)."""
+    root = pathlib.Path(plwordnet_spark.__file__).parent
+    writers = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+        if re.search(r"conf\.(set|unset)\(", line)
+    ]
+    assert writers == []

@@ -213,58 +213,6 @@ def test_stateful_running_totals(spark, sf_dir, tmp_path):
         assert abs(got[uid][1] - t) < 1e-4
 
 
-def test_bucketed_join_no_exchange(spark):
-    """A join between two tables bucketed on the key must not shuffle
-    either side (the Exchange disappears from the physical plan)."""
-    from pyspark.sql import functions as F
-
-    from plwordnet_spark.storage.bucketed import read_table, write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    a = spark.range(10_000).select(
-        F.col("id").alias("src"), (F.col("id") * 2).alias("x")
-    )
-    b = spark.range(10_000).select(
-        F.col("id").alias("src"), (F.col("id") * 3).alias("y")
-    )
-    write_bucketed(a, "bk_a", ["src"], n_buckets=8)
-    write_bucketed(b, "bk_b", ["src"], n_buckets=8)
-    joined = read_table(spark, "bk_a").join(read_table(spark, "bk_b"), "src")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    try:
-        assert "Exchange" not in plan, plan[:1500]
-        assert joined.count() == 10_000
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-        spark.sql("DROP TABLE IF EXISTS bk_a")
-        spark.sql("DROP TABLE IF EXISTS bk_b")
-
-
-def test_bucketed_edges_aggregate_no_exchange(spark):
-    """groupBy(src) over the src-bucketed edge table aggregates without
-    a shuffle (bucket layout satisfies the clustering requirement)."""
-    from pyspark.sql import functions as F
-
-    from plwordnet_spark.corpus import generate_pages
-    from plwordnet_spark.graph.build import build_graph
-    from plwordnet_spark.storage.bucketed import bucketed_edges_tables, read_table
-
-    tables = build_graph(generate_pages(spark, 200, 42))
-    src_table, dst_table = bucketed_edges_tables(spark, tables.edges, prefix="t", n_buckets=4)
-    try:
-        agg = read_table(spark, src_table).groupBy("src").agg(F.sum("weight").alias("w"))
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:1500]
-        # same content as the original edges
-        orig = tables.edges.groupBy("src").agg(F.sum("weight").alias("w"))
-        assert agg.exceptAll(orig).count() == 0 and orig.exceptAll(agg).count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {src_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {dst_table}")
-
-
 def _stage_page_files(pages, src_dir) -> None:
     """Write the 150 generated pages as three separate parquet dirs, so
     a ``maxFilesPerTrigger=1`` stream over them runs three micro-batches."""

@@ -165,30 +165,6 @@ def main() -> int:
         and "partial_sum" in lplan,
     )
 
-    # 8. bucket pruning: a point lookup on a bucketed-by-key table must
-    #    scan ONE bucket's files, not the whole table — the storage-side
-    #    fix for the sequential point-lookup gap (fewer files per job;
-    #    at 100 TB the difference between touching 1/N of the table and
-    #    all of it)
-    from plwordnet_spark.storage.bucketed import (
-        bucket_pruned_scans,
-        drop_table,
-        write_bucketed,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    drop_table(spark, "audit_emb_by_id")  # clears a crashed run's leftovers
-    write_bucketed(emb, "audit_emb_by_id", ["vec_id"], n_buckets=16,
-                   sort_cols=["vec_id"])
-    lookup = spark.table("audit_emb_by_id").filter(F.col("vec_id") == 5)
-    with bucket_pruned_scans(spark):
-        bplan = plan_of(lookup)
-    check(
-        "bucketed point lookup prunes to 1 of 16 buckets",
-        "SelectedBucketsCount: 1 out of 16" in bplan,
-    )
-    drop_table(spark, "audit_emb_by_id")
-
     # 9. binned range join: the point-in-interval join must plan as a
     #    hash EQUI-join on (key, _bin) — never the
     #    BroadcastNestedLoopJoin Spark produces for a raw temporal
