@@ -40,12 +40,14 @@ __all__ = [
     "clean_text",
     "extract_links",
     "extract_page",
+    "host_key",
     "html_to_flat_text",
     "MIN_EXAMPLE_LENGTH",
     "MIN_DEFINITION_LENGTH",
     "MIN_TOPIC_LENGTH",
     "REMOVE_PHRASES",
     "STRIP_CHARS",
+    "typed_links",
 ]
 
 # ---------------------------------------------------------------------------
@@ -217,6 +219,29 @@ def extract_links(html_text: str) -> list[str]:
         if normalized:
             out.append(normalized)
     return out
+
+
+def host_key(url: str) -> str:
+    """Case-folded host of ``url``: the text between the first ``//`` and
+    the next ``/``, lowercased with ``str.lower``; "" when there is no
+    ``//``. The edge table's rel typing compares these keys; the JVM
+    expression behind ``nodes.domain`` (``graph.build._domain``) applies
+    the same rule."""
+    _, sep, rest = url.partition("//")
+    return rest.split("/", 1)[0].lower() if sep else ""
+
+
+def typed_links(url: str | None, html_text: str) -> list[tuple[str, bool]]:
+    """``extract_links`` targets (same order, duplicates kept), each with
+    whether its host equals the page's host (``host_key`` equality). A
+    ``None`` page url shares no host.
+
+    Host case-folding happens here, in the one Python pass that already
+    normalizes every target, rather than as a JVM-side ``lower`` on the
+    edge path: Spark's first ``lower``/``upper`` in a JVM initializes
+    ICU case mapping, a one-off cost of over a second."""
+    src = host_key(url) if url is not None else None
+    return [(dst, host_key(dst) == src) for dst in extract_links(html_text)]
 
 
 _ANCHOR_RE = re.compile(

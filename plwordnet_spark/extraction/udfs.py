@@ -24,11 +24,12 @@ from plwordnet_spark.extraction import oracle
 __all__ = [
     "ANCHOR_SCHEMA",
     "PARSED_PAGE_SCHEMA",
+    "TYPED_LINK_SCHEMA",
     "extract_anchors_udf",
-    "extract_links_udf",
     "extract_text_udf",
     "parse_page_udf",
     "parse_pages",
+    "typed_links_udf",
 ]
 
 ANCHOR_SCHEMA = T.ArrayType(
@@ -36,6 +37,15 @@ ANCHOR_SCHEMA = T.ArrayType(
         [
             T.StructField("url", T.StringType(), False),
             T.StructField("anchor", T.StringType(), False),
+        ]
+    )
+)
+
+TYPED_LINK_SCHEMA = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("dst_url", T.StringType()),
+            T.StructField("same_host", T.BooleanType()),
         ]
     )
 )
@@ -89,10 +99,17 @@ def _decode(value) -> str:
     return str(value)
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    """html binary → array<string> of normalized link targets."""
-    return html.map(lambda h: oracle.extract_links(_decode(h)))
+@F.pandas_udf(TYPED_LINK_SCHEMA)
+def typed_links_udf(url: pd.Series, html: pd.Series) -> pd.Series:
+    """(url, html binary) → array<struct<dst_url,same_host>>: the link
+    targets with their host-equality flag (``oracle.typed_links``)."""
+    return pd.Series(
+        [
+            [{"dst_url": d, "same_host": s} for d, s in oracle.typed_links(u, _decode(h))]
+            for u, h in zip(url, html)
+        ],
+        index=url.index,
+    )
 
 
 @F.pandas_udf(ANCHOR_SCHEMA)

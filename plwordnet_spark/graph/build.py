@@ -5,9 +5,9 @@ The web-scale generalization of the reference's graph build
 property graph *is* two DataFrames (SURVEY.md §1.1) and the build is one
 declarative plan:
 
-    pages ──parse_page_udf──▶ (url, links)
-          ──explode──▶ (src_url, dst_url)
-          ──xxhash64──▶ (src, dst, rel_id)      rel_id: intra/cross domain
+    pages ──typed_links_udf──▶ (url, [(dst_url, same_host)])
+          ──explode──▶ (src_url, dst_url, rel_id)   rel_id: intra/cross domain
+          ──xxhash64──▶ (src, dst, rel_id)
           ──dropDuplicates──▶ edges             (multigraph keyed by rel_id,
                                                  db_to_nx.py:262-284 analog)
     nodes = distinct urls ∪ link targets, with degrees
@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from plwordnet_spark.extraction.udfs import extract_links_udf
+from plwordnet_spark.extraction.udfs import typed_links_udf
 
 __all__ = [
     "GraphTables", "build_graph", "hash_pairs", "id_collisions", "link_pairs",
@@ -44,7 +44,11 @@ REL_CROSS_DOMAIN = 2
 
 
 def _domain(col):
-    # 'https://host/...' → host
+    # 'https://host/...' → host, for nodes.domain only: the JVM twin of
+    # oracle.host_key, which is the reference rule (rel typing uses it, and
+    # test_domain_expr_agrees_with_host_key pins the two together). The
+    # JVM-side lower initializes ICU case mapping on first use (over a
+    # second), so the edge path folds hosts in Python instead
     return F.lower(F.split_part(F.split_part(col, F.lit("//"), F.lit(2)), F.lit("/"), F.lit(1)))
 
 
@@ -59,21 +63,24 @@ def link_pairs(pages: DataFrame) -> DataFrame:
     """pages(url, html, …) → url-level (src_url, dst_url, rel_id, weight).
 
     The one edge derivation: the batch build and every streaming
-    micro-batch hash this plan into ids. Returned uncached — callers
-    that reuse it decide whether to cache."""
+    micro-batch hash this plan into ids. The rel type is decided in the
+    extraction UDF (``oracle.typed_links``: case-folded host equality),
+    so the plan carries no JVM ``lower``/``upper`` and never pays ICU's
+    first-use initialization. Returned uncached — callers that reuse it
+    decide whether to cache."""
     return (
         pages.select(
             F.col("url").alias("src_url"),
-            F.explode(extract_links_udf(F.col("html"))).alias("dst_url"),
+            F.explode(typed_links_udf(F.col("url"), F.col("html"))).alias("link"),
         )
         # multigraph rel typing: intra- vs cross-domain link (RelationType
         # analog, rel_type.py:12-28 — here derived, not a lookup)
-        .withColumn(
-            "rel_id",
-            F.when(
-                _domain(F.col("src_url")) == _domain(F.col("dst_url")),
-                F.lit(REL_INTRA_DOMAIN),
-            ).otherwise(F.lit(REL_CROSS_DOMAIN)),
+        .select(
+            "src_url",
+            F.col("link.dst_url").alias("dst_url"),
+            F.when(F.col("link.same_host"), F.lit(REL_INTRA_DOMAIN))
+            .otherwise(F.lit(REL_CROSS_DOMAIN))
+            .alias("rel_id"),
         )
         # collapse duplicate anchors; weight = multiplicity (kept so the
         # dedup is lossless — dropDuplicates would discard it)
@@ -159,11 +166,16 @@ def id_collisions(nodes: DataFrame) -> int:
 
 
 def validate_graph(tables: GraphTables) -> dict:
-    """Cohesion checks — the db_to_nx.py:286-391 analog as one job.
+    """Cohesion checks — the db_to_nx.py:286-391 analog, one scan per table.
 
     Returns a dict of named counts; raises ValueError on violation
     (mirrors the reference's RuntimeError on edge-count mismatch,
     db_to_nx.py:342-345).
+
+    The node stats keep a global ``countDistinct(url)``: it reports one
+    url stored under two ids as a node/url mismatch, which a single
+    grouped-by-id aggregate over nodes ∪ edge refs cannot see (that fold
+    ran three fewer jobs but was no faster end to end).
     """
     # three jobs total (one scan per table): node stats in one agg,
     # edge count + missing-dst refs in one outer-join agg, pair count

@@ -235,7 +235,7 @@ def louvain_move_phase(
             .localCheckpoint(eager=True)
         )
         if store and (r % checkpoint_interval == 0 or r == rounds):
-            labels = store.write(labels, r, {"round": r})
+            labels = spark.read.parquet(store.write(labels, r, {"round": r})["path"])
     adj.unpersist()
     deg.unpersist()
     return labels

@@ -199,7 +199,8 @@ class PregelRunner:
                 "seconds": time.time() - started,
             }
             if durable:
-                state = self.store.commit_staged(staged, iteration, entry)
+                committed = self.store.commit_staged(staged, iteration, entry)
+                state = self.spark.read.parquet(committed["path"])
                 if self.retain_snapshots is not None:
                     self.store.prune(keep_last=self.retain_snapshots)
             metrics.append(entry)
@@ -210,7 +211,8 @@ class PregelRunner:
             # final durable snapshot so resume() always sees the end state
             last = self.store.manifest()[-1] if self.store.manifest() else None
             if last is None or last["iteration"] != iteration:
-                state = self.store.write(state, iteration, metrics[-1] if metrics else {})
+                committed = self.store.write(state, iteration, metrics[-1] if metrics else {})
+                state = self.spark.read.parquet(committed["path"])
         return PregelResult(state=state, iterations=iteration, converged=converged, metrics=metrics)
 
     def resume(

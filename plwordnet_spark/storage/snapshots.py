@@ -61,12 +61,12 @@ class SnapshotStore:
         os.replace(tmp, self._manifest_path)  # atomic commit of the snapshot
 
     # -- write / read ------------------------------------------------------
-    def write(self, df: DataFrame, iteration: int, metrics: dict | None = None) -> DataFrame:
-        """Persist ``df`` as the next snapshot; return the re-read frame
-        (lineage truncated — the caller continues iterating on the
-        re-read plan, which is the whole point of checkpointing).
+    def write(self, df: DataFrame, iteration: int, metrics: dict | None = None) -> dict:
+        """Persist ``df`` as the next snapshot; return its manifest entry.
         Implemented as stage + commit so the snapshot id is assigned at
-        COMMIT time (two concurrent stages cannot collide on a path)."""
+        COMMIT time (two concurrent stages cannot collide on a path). A
+        caller that continues iterating on the snapshot (lineage
+        truncated) reads ``entry["path"]`` itself."""
         return self.commit_staged(self.stage(df), iteration, metrics)
 
     # -- staged two-phase write --------------------------------------------
@@ -84,9 +84,12 @@ class SnapshotStore:
         df.write.mode("overwrite").parquet(path)
         return path
 
-    def commit_staged(self, staged_path: str, iteration: int, metrics: dict | None = None) -> DataFrame:
+    def commit_staged(self, staged_path: str, iteration: int, metrics: dict | None = None) -> dict:
         """Phase 2: atomically promote a staged directory to the next
-        snapshot (same-filesystem rename + manifest append)."""
+        snapshot (same-filesystem rename + manifest append) and return
+        its manifest entry. Nothing is re-read: a caller that continues
+        on the snapshot reads ``entry["path"]`` itself, so a commit whose
+        frame nobody uses pays no schema-inference job."""
         entries = self.manifest()
         snap_id = len(entries)
         path = os.path.join(self.root, f"snap_{snap_id:06d}")
@@ -96,18 +99,17 @@ class SnapshotStore:
             for name in sorted(os.listdir(path))
             if name.endswith(".parquet")
         ]
-        entries.append(
-            {
-                "snapshot_id": snap_id,
-                "iteration": iteration,
-                "committed_at": time.time(),
-                "metrics": metrics or {},
-                "path": path,
-                "partition_lineage": files,
-            }
-        )
+        entry = {
+            "snapshot_id": snap_id,
+            "iteration": iteration,
+            "committed_at": time.time(),
+            "metrics": metrics or {},
+            "path": path,
+            "partition_lineage": files,
+        }
+        entries.append(entry)
         self._write_manifest(entries)
-        return self.spark.read.parquet(path)
+        return entry
 
     def abandon_staged(self, staged_path: str) -> None:
         """Discard a staged write (replayed micro-batch, aborted job)."""

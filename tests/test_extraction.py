@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from plwordnet_spark.corpus import generate_pages, page_record
 from plwordnet_spark.extraction import oracle
-from plwordnet_spark.extraction.udfs import extract_links_udf, extract_text_udf, parse_pages
+from plwordnet_spark.extraction.udfs import extract_text_udf, parse_pages, typed_links_udf
 
 N_PAGES = 300
 SEED = 42
@@ -78,15 +78,18 @@ def test_udf_byte_identity_vs_oracle(spark):
     extracted = (
         pages.select(
             "url",
+            "html",
             "text",
             extract_text_udf(F.col("html")).alias("udf_text"),
-            extract_links_udf(F.col("html")).alias("udf_links"),
+            typed_links_udf(F.col("url"), F.col("html")).dst_url.alias("udf_links"),
         )
     )
     mismatches = extracted.filter(F.col("text") != F.col("udf_text")).count()
     assert mismatches == 0
     rows = extracted.collect()
     assert len(rows) == N_PAGES
+    for row in rows:
+        assert list(row.udf_links) == oracle.extract_links(bytes(row.html).decode("utf-8"))
     # cross-check a sample row against a fresh local oracle run
     sample = pages.limit(5).collect()
     for row in sample:

@@ -115,14 +115,14 @@ def cmd_run(args) -> None:
         from pyspark.sql import functions as F
 
         from plwordnet_spark.corpus import generate_pages
-        from plwordnet_spark.extraction.udfs import extract_links_udf, extract_text_udf
+        from plwordnet_spark.extraction.udfs import extract_text_udf, typed_links_udf
 
         pages = generate_pages(spark, EXTRACT_PAGES, 42, partitions=cpus * 2).cache()
         n = pages.count()  # corpus synthesis excluded
         start = time.time()
         out = pages.select(
             extract_text_udf("html").alias("t"),
-            F.size(extract_links_udf("html")).alias("k"),
+            F.size(typed_links_udf("url", "html")).alias("k"),
         ).agg(F.sum(F.length("t")), F.sum("k"))
         out.collect()
         sec = time.time() - start
