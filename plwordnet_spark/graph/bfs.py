@@ -603,7 +603,7 @@ def bfs_tree(
     res = bfs_distances(
         spark, edges, sources, directed=directed, max_iterations=max_iterations
     )
-    d = res.state.localCheckpoint(eager=True)
+    d = res.state
     rel = _unweighted_rel(edges, directed)
     preds = (
         rel.join(

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from plwordnet_spark.graph.pregel import PregelRunner
+
 __all__ = ["louvain_move_phase", "contract_graph", "louvain"]
 
 
@@ -61,20 +63,25 @@ def louvain_move_phase(
     replay exact — fractional weights work but cross-engine replay then
     rides on rounding.
 
-    **Checkpoint/resume** (the delta-stepping/pagerank contract):
-    ``checkpoint_dir`` snapshots the label state every
-    ``checkpoint_interval`` rounds via
-    :class:`~plwordnet_spark.storage.snapshots.SnapshotStore`;
-    ``resume=True`` restarts from the latest snapshot's ABSOLUTE round
-    index, so the parity alternation — the determinism anchor — picks
-    up exactly where the killed run left off and the final labels equal
-    an uninterrupted run (tested). The adjacency/degree/2m inputs are
-    recomputed from ``edges`` on resume (same input ⇒ identical exact
-    aggregates).
+    **Checkpoint/resume**: the rounds run on
+    :class:`~plwordnet_spark.graph.pregel.PregelRunner`, which snapshots
+    the label state every ``checkpoint_interval`` rounds (and after the
+    last) when ``checkpoint_dir`` is set; the manifest entry's
+    ``iteration`` is the absolute round. ``resume=True`` restarts from
+    the latest snapshot at that round, so the parity alternation — the
+    determinism anchor — picks up exactly where the killed run left off
+    and the final labels equal an uninterrupted run (tested). The
+    adjacency/degree/2m inputs are recomputed from ``edges`` on resume
+    (same input ⇒ identical exact aggregates).
     """
-    from plwordnet_spark.storage.snapshots import SnapshotStore
-
-    store = SnapshotStore(spark, checkpoint_dir) if checkpoint_dir else None
+    runner = PregelRunner(
+        spark,
+        max_iterations=rounds,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval,
+    )
+    if resume and runner.store is None:
+        raise ValueError("resume requires a checkpoint_dir")
     w = F.col(weight_col) if weight_col else F.lit(1.0)
     und_all = (
         edges.select(
@@ -124,21 +131,19 @@ def louvain_move_phase(
         deg.unpersist()
         return spark.createDataFrame([], "id long, label long")
 
+    labels = deg.select("id", F.col("id").alias("label"))
     start_round = 0
-    labels = None
-    if resume:
-        if store is None:
-            raise ValueError("resume requires a checkpoint_dir")
-        got = store.latest()
-        if got is not None:
-            snap, entry = got
-            labels = snap.select("id", "label")
-            start_round = int(entry["iteration"])
-    if labels is None:
-        labels = deg.select("id", F.col("id").alias("label")).localCheckpoint(
-            eager=True
-        )
-    for r in range(start_round + 1, rounds + 1):
+    latest = runner.store.latest() if resume else None
+    if latest is not None:
+        snap, entry = latest
+        labels = snap.select("id", "label")
+        start_round = int(entry["iteration"])
+    # the runner calls step once per iteration, in order, so the
+    # absolute round (the parity anchor) is the next value of this range
+    round_of_step = iter(range(start_round + 1, rounds + 1))
+
+    def step(labels: DataFrame) -> DataFrame:
+        r = next(round_of_step)
         tot = (
             labels.join(deg, "id")
             .groupBy(F.col("label").alias("c"))
@@ -224,18 +229,14 @@ def louvain_move_phase(
             .select("id", F.col("c").alias("best"))
         )
         active = F.pmod(F.col("id"), F.lit(2)) == F.lit((r - 1) % 2)
-        labels = (
-            labels.join(pick.hint("shuffle_hash"), "id")
-            .select(
-                "id",
-                F.when(active, F.col("best"))
-                .otherwise(F.col("label"))
-                .alias("label"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(pick.hint("shuffle_hash"), "id").select(
+            "id",
+            F.when(active, F.col("best"))
+            .otherwise(F.col("label"))
+            .alias("label"),
         )
-        if store and (r % checkpoint_interval == 0 or r == rounds):
-            labels = spark.read.parquet(store.write(labels, r, {"round": r})["path"])
+
+    labels = runner.run(labels, step, start_iteration=start_round).state
     adj.unpersist()
     deg.unpersist()
     return labels
@@ -310,7 +311,7 @@ def louvain(
         raise ValueError("levels must be >= 1")
     mapping = louvain_move_phase(
         spark, edges, rounds=rounds_per_level, weight_col=weight_col
-    ).localCheckpoint(eager=True)
+    )
     g = contract_graph(edges, mapping, weight_col=weight_col)
     for _ in range(levels - 1):
         g = g.select(

@@ -24,8 +24,8 @@ Round structure (all DataFrame ops, no driver-side graph):
 
 With random priorities Luby needs O(log n) rounds in expectation; the
 deterministic variant keeps that behaviour on real graphs (the global
-minimum always wins, and dense neighbourhoods collapse in bulk — the
-round count is logged per round via the returned metrics).
+minimum always wins, and dense neighbourhoods collapse in bulk — each
+vertex's settling round is the ``mis_round`` column of the result).
 
 Scale shape per round: one shuffle for the neighbour-min gather
 (composite min folds map-side), two anti-joins against the (small,

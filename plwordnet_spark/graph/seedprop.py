@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from plwordnet_spark.graph.pregel import PregelRunner
+
 __all__ = ["seed_label_spread"]
 
 
@@ -77,14 +79,11 @@ def seed_label_spread(
         .unionByName(adj.select(F.col("j").alias("id")))
         .distinct()
     )
-    seed_tbl = (
-        seeds.select("id", F.col("label").cast("long").alias("label"))
-        .join(node_ids, "id", "left_semi")
-        .cache()
+    seed_tbl = seeds.select("id", F.col("label").cast("long").alias("label")).join(
+        node_ids, "id", "left_semi"
     )
-    labels = seed_tbl.localCheckpoint(eager=True)
 
-    for _ in range(rounds):
+    def step(labels: DataFrame) -> DataFrame:
         votes = (
             adj.join(
                 labels.select(
@@ -108,11 +107,10 @@ def seed_label_spread(
             .select("id", F.col("l").alias("label"))
         )
         # freeze-on-first-label: only nodes not yet labeled adopt
-        labels = (
-            labels.unionByName(
-                pick.join(labels.select("id"), "id", "left_anti")
-            )
-        ).localCheckpoint(eager=True)
+        return labels.unionByName(
+            pick.join(labels.select("id"), "id", "left_anti")
+        )
+
+    labels = PregelRunner(spark, max_iterations=rounds).run(seed_tbl, step).state
     adj.unpersist()
-    seed_tbl.unpersist()
     return labels

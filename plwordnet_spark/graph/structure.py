@@ -21,8 +21,11 @@ Scale notes (100 TB design points):
   + two hash joins onto the edge list + a single-pass ``corr``; no
   driver-side state beyond the final scalar.
 * ``strongly_connected_components`` — trim + forward min-label coloring
-  + backward reachability (the MapReduce coloring algorithm, Orzan-style)
-  under :class:`PregelRunner` lineage control. Phases extract at least
+  + backward reachability (the MapReduce coloring algorithm, Orzan-style).
+  Both colouring fixpoints run on :class:`PregelRunner`: one action per
+  round, whose observed lowered/newly-reached row count is the
+  convergence test. The trim/phase loop around them shrinks the active
+  subgraph and keeps its own checkpoints. Phases extract at least
   the SCC of every color root per round; on bow-tie-shaped web graphs
   the giant core falls out in the first phase and the tendrils are
   consumed by the O(1)-round trim, which is why coloring is the standard
@@ -36,7 +39,8 @@ Scale notes (100 TB design points):
   HyperLogLog sketch columns (``hll_sketch_agg`` / ``hll_union_agg`` /
   ``hll_union``): per node a fixed 2^lg_k-register sketch of its
   out-ball, per iteration ONE edges⋈state join + ONE grouped sketch
-  union — O(|E|) rows shuffled per hop carrying O(2^lg_k)-byte sketch
+  union, run on :class:`PregelRunner` with N(t) observed on the hop's
+  checkpoint — O(|E|) rows shuffled per hop carrying O(2^lg_k)-byte sketch
   payloads, never materializing the quadratic reachability set. This is
   the textbook case for sketches at 100 TB: the exact neighborhood
   function is Θ(n²) pairs, the sketch run is Θ(|E| · diameter).
@@ -122,58 +126,43 @@ def _fixpoint_min_color(
     edges: DataFrame,
     colors: DataFrame,
     max_iters: int,
-    truncate_every: int = 5,
 ) -> DataFrame:
     """Propagate ``color`` forward along edges to a fixpoint:
     color(v) <- min(color(v), min over in-neighbors u of color(u)).
     Converges to color(v) = min id over {v} ∪ ancestors(v). Colors only
-    decrease, so sum(color) is strictly decreasing until the fixpoint —
-    the convergence check is one cheap aggregate, no old⋈new join."""
-    state = colors.localCheckpoint(eager=True)
-    prev_sum = state.agg(F.sum("color")).first()[0] or 0
-    for it in range(1, max_iters + 1):
+    decrease, so the round that lowers no color is the fixpoint — the
+    lowered-row count rides the runner's checkpoint as an observed
+    scalar, no old⋈new join and no second action."""
+
+    def step(state: DataFrame) -> DataFrame:
         incoming = (
             edges.join(state, edges.src == state.id)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("color").alias("in_color"))
         )
-        new_state = (
-            state.join(incoming, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("color"), F.coalesce("in_color", F.col("color"))
-                ).alias("color"),
-            )
+        return state.join(incoming, "id", "left").select(
+            "id",
+            F.least(F.col("color"), F.coalesce("in_color", F.col("color"))).alias("color"),
+            F.coalesce(F.col("in_color") < F.col("color"), F.lit(False)).alias("changed"),
         )
-        if it % truncate_every == 0:
-            new_state = new_state.localCheckpoint(eager=True)
-        else:
-            new_state = new_state.persist()
-        new_sum = new_state.agg(F.sum("color")).first()[0] or 0
-        state.unpersist()
-        state = new_state
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return state
+
+    runner = PregelRunner(spark, max_iterations=max_iters, tol=0.5)
+    return runner.run(colors, step, *frontier_scalars()).state
 
 
 def _fixpoint_reach_root(
+    spark: SparkSession,
     edges: DataFrame,
     colored: DataFrame,
     max_iters: int,
-    truncate_every: int = 5,
 ) -> DataFrame:
     """Within each color class, mark nodes that can REACH their color
     root (propagate ``reached`` along REVERSED edges from the roots,
-    restricted to same-color endpoints). count(reached) only grows, so
-    convergence is again a single aggregate."""
-    state = colored.withColumn(
-        "reached", (F.col("id") == F.col("color"))
-    ).localCheckpoint(eager=True)
-    prev_n = state.filter("reached").count()
-    for it in range(1, max_iters + 1):
+    restricted to same-color endpoints). ``reached`` only grows, so the
+    round that reaches no new node is the fixpoint — again one observed
+    count on the runner's checkpoint."""
+
+    def step(state: DataFrame) -> DataFrame:
         # v reaches root if some out-neighbor w (same color) reaches it
         succ = (
             edges.join(
@@ -186,27 +175,14 @@ def _fixpoint_reach_root(
             .groupBy(F.col("src").alias("id"), F.col("w_color").alias("color"))
             .agg(F.max("reached").alias("succ_reached"))
         )
-        new_state = (
-            state.join(succ, ["id", "color"], "left")
-            .select(
-                "id",
-                "color",
-                (F.col("reached") | F.coalesce("succ_reached", F.lit(False))).alias(
-                    "reached"
-                ),
-            )
+        newly = ~F.col("reached") & F.coalesce("succ_reached", F.lit(False))
+        return state.join(succ, ["id", "color"], "left").select(
+            "id", "color", (F.col("reached") | newly).alias("reached"), newly.alias("changed")
         )
-        if it % truncate_every == 0:
-            new_state = new_state.localCheckpoint(eager=True)
-        else:
-            new_state = new_state.persist()
-        new_n = new_state.filter("reached").count()
-        state.unpersist()
-        state = new_state
-        if new_n == prev_n:
-            break
-        prev_n = new_n
-    return state
+
+    init = colored.withColumn("reached", F.col("id") == F.col("color"))
+    runner = PregelRunner(spark, max_iterations=max_iters, tol=0.5)
+    return runner.run(init, step, *frontier_scalars()).state
 
 
 def strongly_connected_components(
@@ -292,7 +268,7 @@ def strongly_connected_components(
         colors = active_nodes.select("id", F.col("id").alias("color"))
         colored = _fixpoint_min_color(spark, active_edges, colors, max_prop_iters)
         # --- 3. backward reach-root within color class --------------
-        marked = _fixpoint_reach_root(active_edges, colored, max_prop_iters)
+        marked = _fixpoint_reach_root(spark, active_edges, colored, max_prop_iters)
         extracted = (
             marked.filter("reached")
             .select("id", F.col("color").alias("component"))
@@ -300,7 +276,6 @@ def strongly_connected_components(
         )
         n_extracted = extracted.count()
         resolved.append(extracted)
-        marked.unpersist()
         # --- 4. shrink active subgraph ------------------------------
         active_nodes = active_nodes.join(
             extracted, "id", "left_anti"
@@ -426,7 +401,7 @@ def neighborhood_function(
     hash join + one grouped ``hll_union_agg`` per hop, merged back into
     the running state with the scalar ``hll_union``. The per-hop
     aggregate N(t) = Σ_v estimate(state(v)) is the only driver-side
-    value. Sketch width 2^lg_k registers bounds the relative error at
+    value; it rides the hop's one action as an observed scalar. Sketch width 2^lg_k registers bounds the relative error at
     ≈ 1.04/√2^lg_k (0.8% at the default 14) independent of graph size —
     the whole point at 10^11 nodes, where the exact neighborhood
     function is a Θ(n²) object.
@@ -438,39 +413,36 @@ def neighborhood_function(
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    state = nodes.groupBy("id").agg(F.hll_sketch_agg("id", lg_k).alias("sk"))
-    state = state.localCheckpoint(eager=True)
-    n_nodes = state.count()
-    history: list[tuple[int, int]] = [(0, n_nodes)]  # N(0) = the nodes themselves
-    prev_total = n_nodes
+    init = nodes.groupBy("id").agg(F.hll_sketch_agg("id", lg_k).alias("sk"))
 
-    for t in range(1, max_distance + 1):
+    def step(state: DataFrame) -> DataFrame:
         succ = (
             e.join(state, e.dst == state.id)
             .groupBy(F.col("src").alias("id"))
             .agg(F.hll_union_agg("sk").alias("succ_sk"))
         )
-        new_state = (
-            state.join(succ, "id", "left")
-            .select(
-                "id",
-                F.coalesce(
-                    F.hll_union("sk", "succ_sk"), F.col("sk")
-                ).alias("sk"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(succ, "id", "left").select(
+            "id", F.coalesce(F.hll_union("sk", "succ_sk"), F.col("sk")).alias("sk")
         )
-        total = int(
-            new_state.agg(
-                F.sum(F.hll_sketch_estimate("sk")).alias("n")
-            ).first()["n"]
-        )
-        state.unpersist()
-        state = new_state
-        history.append((t, total))
-        if total == prev_total:
-            break
-        prev_total = total
+
+    # N(t) and the node count N(0) ride the hop's checkpoint; the loop
+    # stops on the first hop whose N(t) equals N(t-1)
+    scalars = [
+        F.sum(F.hll_sketch_estimate("sk")).alias("n"),
+        F.count(F.lit(1)).alias("n_nodes"),
+    ]
+    prev: list[int] = []
+
+    def delta(observed: dict) -> float:
+        total = int(observed["n"])
+        changed = total != (prev[-1] if prev else observed["n_nodes"])
+        prev.append(total)
+        return float(changed)
+
+    runner = PregelRunner(spark, max_iterations=max_distance, tol=0.5)
+    res = runner.run(init, step, scalars, delta)
+    n_nodes = res.metrics[0]["n_nodes"] if res.metrics else res.state.count()
+    history = [(0, n_nodes)] + [(m["iteration"], int(m["n"])) for m in res.metrics]
 
     final_total = history[-1][1]
     threshold = quantile * final_total

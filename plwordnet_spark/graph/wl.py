@@ -30,13 +30,16 @@ Scale shape — identical per-round traffic to PageRank's gather: one
 join of the cached, pre-partitioned edge list against the label state +
 one groupBy(sum) with map-side partial aggregation, state is exactly
 one row per node, and hub skew folds in the partial agg. Fixed
-iteration count (no convergence action), so the loop is k jobs flat.
+iteration count on :class:`PregelRunner` with no scalars, so each round
+is the runner's one checkpoint action and nothing else.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from plwordnet_spark.graph.pregel import PregelRunner
 
 __all__ = ["wl_labels", "WL_P", "WL_A", "WL_B", "WL_C"]
 
@@ -73,14 +76,14 @@ def wl_labels(
     )
     rel.count()
 
-    labels = (
+    init = (
         rel.select(F.col("u").alias("id"))
         .unionByName(rel.select(F.col("v").alias("id")))
         .distinct()
         .select("id", F.lit(1).cast("long").alias("label"))
-    ).localCheckpoint(eager=True)
+    )
 
-    for _ in range(iterations):
+    def step(labels: DataFrame) -> DataFrame:
         contrib = (
             rel.join(
                 labels.select(
@@ -99,19 +102,17 @@ def wl_labels(
                 ).alias("t")
             )
         )
-        labels = (
-            labels.join(contrib, "id", "left")
-            .select(
-                "id",
+        return labels.join(contrib, "id", "left").select(
+            "id",
+            (
                 (
-                    (
-                        F.lit(WL_A) * F.col("label")
-                        + F.coalesce(F.col("t"), F.lit(0))
-                    )
-                    % F.lit(WL_P)
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+                    F.lit(WL_A) * F.col("label")
+                    + F.coalesce(F.col("t"), F.lit(0))
+                )
+                % F.lit(WL_P)
+            ).alias("label"),
         )
+
+    labels = PregelRunner(spark, max_iterations=iterations).run(init, step).state
     rel.unpersist()
     return labels

@@ -26,16 +26,32 @@ from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "stop_spark", "write_package_zip"]
 
 _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def write_package_zip(zip_path: str) -> str:
+    """Write this package's ``.py`` files to ``zip_path`` under
+    ``plwordnet_spark/`` — the ``--py-files`` artifact, used both for
+    ``spark-submit`` and by :func:`get_spark` for local workers."""
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(_PACKAGE_DIR):
+            for name in sorted(files):
+                if name.endswith(".py"):
+                    full = os.path.join(root, name)
+                    rel = os.path.relpath(full, _PACKAGE_DIR)
+                    zf.write(full, os.path.join("plwordnet_spark", rel))
+    return zip_path
 
 
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors — the local-mode equivalent of
     ``spark-submit --py-files`` (north rule launch mode). Without it,
     pandas-UDF workers started from another CWD can't unpickle functions
-    defined in this package.
+    defined in this package. A package imported from a zip (already
+    shipped by ``--py-files``) is not a directory and is not shipped
+    again.
 
     The zip name carries a content token (package path + newest .py
     mtime), not just the pid: a pid-only name let a pid-recycled process
@@ -44,6 +60,8 @@ def _ship_package(spark: SparkSession) -> None:
     KeyError in a worker-side gather during A/B measurement."""
     import hashlib
 
+    if not os.path.isdir(_PACKAGE_DIR):
+        return
     newest = 0.0
     for root, _dirs, files in os.walk(_PACKAGE_DIR):
         for name in files:
@@ -57,16 +75,7 @@ def _ship_package(spark: SparkSession) -> None:
         tempfile.gettempdir(), f"plwordnet_spark_pyfiles_{os.getpid()}_{token}.zip"
     )
     if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(_PACKAGE_DIR):
-                for name in files:
-                    if not name.endswith(".py"):
-                        continue
-                    full = os.path.join(root, name)
-                    rel = os.path.join(
-                        "plwordnet_spark", os.path.relpath(full, _PACKAGE_DIR)
-                    )
-                    zf.write(full, rel)
+        write_package_zip(zip_path)
     spark.sparkContext.addPyFile(zip_path)
 
 

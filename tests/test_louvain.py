@@ -6,7 +6,10 @@ from __future__ import annotations
 import random
 from collections import defaultdict
 
+import pytest
+
 from plwordnet_spark.graph.louvain import louvain_move_phase
+from plwordnet_spark.storage.snapshots import SnapshotStore
 
 
 def _py_louvain(edge_list, rounds):
@@ -257,7 +260,9 @@ class TestMultiLevel:
 
 
 class TestCheckpointResume:
-    def test_kill_and_resume_matches_uninterrupted(self, spark, tmp_path):
+    # an odd kill round resumes on the other parity half
+    @pytest.mark.parametrize("kill_round", [1, 2, 3])
+    def test_kill_and_resume_matches_uninterrupted(self, spark, tmp_path, kill_round):
         import random
 
         rng = random.Random(13)
@@ -270,10 +275,12 @@ class TestCheckpointResume:
             for r in louvain_move_phase(spark, df, rounds=5).collect()
         }
         ckpt = str(tmp_path / "ck")
-        # "killed" run: only 2 of 5 rounds complete, snapshot at round 2
+        # "killed" run: only kill_round of 5 rounds complete; its last
+        # round is always snapshotted
         louvain_move_phase(
-            spark, df, rounds=2, checkpoint_dir=ckpt, checkpoint_interval=2
+            spark, df, rounds=kill_round, checkpoint_dir=ckpt, checkpoint_interval=2
         )
+        assert SnapshotStore(spark, ckpt).manifest()[-1]["iteration"] == kill_round
         resumed = {
             r["id"]: r["label"]
             for r in louvain_move_phase(

@@ -44,3 +44,17 @@ def test_engine_never_writes_session_conf():
         if re.search(r"conf\.(set|unset)\(", line)
     ]
     assert writers == []
+
+
+def test_graph_loops_checkpoint_through_the_runner():
+    """Loops checkpoint and resume through ``PregelRunner``: under
+    ``graph/`` only the runner and delta-stepping's two-phase rounds
+    open a ``SnapshotStore``, and no loop keeps a private lineage-cut
+    cadence (``truncate_every``) — pure source scan."""
+    root = pathlib.Path(plwordnet_spark.__file__).parent / "graph"
+    sources = {path.name: path.read_text(encoding="utf-8") for path in root.rglob("*.py")}
+    assert sorted(name for name, text in sources.items() if "SnapshotStore(" in text) == [
+        "bfs.py",
+        "pregel.py",
+    ]
+    assert [name for name, text in sources.items() if "truncate_every" in text] == []

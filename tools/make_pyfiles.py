@@ -1,7 +1,8 @@
 """Build the ``--py-files`` artifact for cluster submission.
 
-Produces ``dist/plwordnet_spark.zip`` containing the package exactly as
-``plwordnet_spark.session.get_spark`` ships it to local workers, so
+Produces ``dist/plwordnet_spark.zip`` with
+:func:`plwordnet_spark.session.write_package_zip`, the writer
+``get_spark`` uses to ship the package to local workers, so
 
     spark-submit --py-files dist/plwordnet_spark.zip your_job.py
 
@@ -13,25 +14,16 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PKG = os.path.join(REPO, "plwordnet_spark")
+sys.path.insert(0, REPO)
+
+from plwordnet_spark.session import write_package_zip  # noqa: E402
 
 
 def build(out_dir: str) -> str:
     os.makedirs(out_dir, exist_ok=True)
-    zip_path = os.path.join(out_dir, "plwordnet_spark.zip")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(PKG):
-            if "__pycache__" in root:
-                continue
-            for name in sorted(files):
-                if not name.endswith(".py"):
-                    continue
-                full = os.path.join(root, name)
-                zf.write(full, os.path.relpath(full, REPO))
-    return zip_path
+    return write_package_zip(os.path.join(out_dir, "plwordnet_spark.zip"))
 
 
 if __name__ == "__main__":
